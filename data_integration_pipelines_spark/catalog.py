@@ -99,10 +99,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register every table as a temp view (``spark.sql`` entry path)."""
     for t in TABLES:

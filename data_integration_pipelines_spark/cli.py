@@ -534,6 +534,10 @@ def cmd_gopher_filter(args) -> int:
     else:
         verdicts = gopher_filter_frame(gopher_signals_frame(docs))
     verdicts.write.mode("overwrite").parquet(_out(args, "gopher_verdicts"))
+    # summarize the table just written: a filter on ``keep`` over the
+    # layered verdict frame would substitute every signal alias back
+    # through the layers and re-evaluate the whole per-row plan
+    verdicts = spark.read.parquet(_out(args, "gopher_verdicts"))
     agg = verdicts.groupBy("keep").count().collect()
     counts = {("kept" if r.keep else "rejected"): r["count"] for r in agg}
     hist = {

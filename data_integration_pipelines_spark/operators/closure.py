@@ -168,13 +168,6 @@ def transitive_closure(
     return closure
 
 
-def ancestors_of(closure: DataFrame, node_ids: DataFrame, id_col: str) -> DataFrame:
-    """Join helper: all ancestors for the given node ids (broadcast closure)."""
-    return node_ids.join(
-        F.broadcast(closure), node_ids[id_col] == closure.node, "left"
-    )
-
-
 def first_common_ancestor(
     closure: DataFrame,
     pairs: DataFrame,

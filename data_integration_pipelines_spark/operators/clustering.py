@@ -806,13 +806,18 @@ def semdedup_assign(
     # aggregate (r12, guide §1.2 — the front door is a chain of
     # blocking jobs, so the separate .first() probe was a pure
     # scheduler round-trip; the count's full scan dominates either way
-    # and F.first here only needs any one vector's length)
+    # and F.first here only needs any one non-NULL vector's length)
     route_row = df.agg(
-        F.count(F.lit(1)).alias("n"), F.first(F.col(vec_col)).alias("v")
+        F.count(F.lit(1)).alias("n"),
+        F.first(F.col(vec_col), ignorenulls=True).alias("v"),
     ).first()
     n = int(route_row["n"])
-    if n == 0 or route_row["v"] is None:
+    if n == 0:
         raise ValueError("semdedup_assign on an empty DataFrame")
+    if route_row["v"] is None:
+        raise ValueError(
+            f"semdedup_assign: every {vec_col!r} value is NULL ({n} rows)"
+        )
     dim = len(route_row["v"])
     kk = auto_k(n) if k == "auto" else int(k)
     if semdedup_route(n, kk, dim, flat_cells) == "flat":

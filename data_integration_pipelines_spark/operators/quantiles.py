@@ -21,6 +21,8 @@ configured eps=1e-4, the approx_quantile_check pattern.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -95,14 +97,23 @@ def with_quartile_bin(
                 # zero additional corpus passes.
                 from pyspark.sql import types as T
 
-                cuts_view = f"{view}__qcuts"
+                # a per-call name, so concurrent calls on one view never
+                # read each other's cuts
+                cuts_view = f"{view}__qcuts_{uuid.uuid4().hex}"
                 spark.createDataFrame(
                     [(probe["qa"],)],
                     schema=T.StructType(
                         [T.StructField("qa", probe_df.schema["qa"].dataType)]
                     ),
                 ).createOrReplaceTempView(cuts_view)
-                return _binned(spark, view, vcol, f"SELECT qa FROM {cuts_view}")
+                try:
+                    return _binned(
+                        spark, view, vcol, f"SELECT qa FROM {cuts_view}"
+                    )
+                finally:
+                    # spark.sql analyses eagerly: the cuts are resolved
+                    # into the returned plan, so the view can go now
+                    spark.catalog.dropTempView(cuts_view)
             method = "exact"
     # ONE aggregate call with the percentage ARRAY: three separate
     # percentile(col, p) calls each buffer (and, exact-path, sort) the

@@ -1,12 +1,10 @@
-"""Skew-mitigation operators: two-phase salted aggregation and salted
-broadcast-side explosion for skewed joins.
+"""Skew-mitigation operators: two-phase salted aggregation.
 
 AQE's skew-join splitting handles most shuffle skew at runtime
-(enabled in session.py); these operators are for the cases AQE cannot
+(enabled in session.py); these operators are for the case AQE cannot
 fix: a groupBy where one key holds a large share of all rows (the
 partial aggregate helps but the final reduce of that key still lands
-on one task when per-key state is large, e.g. collect_list/distinct),
-and map-side-exploded broadcast joins against a hot key.
+on one task when per-key state is large, e.g. collect_list/distinct).
 
 The salted aggregate is algebraic re-association: any aggregate with
 a merge function (count/sum/min/max, approx sketches) can aggregate
@@ -67,25 +65,6 @@ def salted_agg(
             for out, (name, _col) in aggs.items()
         ]
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Hot-key broadcast join: the small side is exploded n_salts times
-    with a salt column; the big side salts deterministically, so each
-    hot-key row matches exactly one replica and the hot key's rows
-    spread over n_salts tasks."""
-    replicas = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    salted_big = big.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    )
-    return salted_big.join(F.broadcast(replicas), [key, "__salt"]).drop("__salt")
 
 
 def keep_latest_salted(

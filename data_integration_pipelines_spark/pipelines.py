@@ -31,10 +31,6 @@ from .operators.morphology import morphology_flags
 from .operators.voxel import lookup_regions
 
 
-def _exists_label(col: str, label: str):
-    return F.exists(F.col(col), lambda a: a["hasBody"]["label"] == label)
-
-
 def trace_audit(resources: DataFrame, curated: bool | None = None) -> DataFrame:
     """EP1: per-resource quality-check battery -> one row per resource
     with named boolean check columns + an ``errors`` array of failed

@@ -28,7 +28,8 @@ from ..operators.dedup import (
     jaccard_pairs,
     relative_doc_freq_cap_expr,
 )
-from .base import REGISTRY, register
+from ..operators.skew import grouped_topk_salted, stratified_fraction_cut
+from .base import register
 from .lsh_oracle import (
     cap_cte,
     capped_sig_cte_dyn,
@@ -428,9 +429,9 @@ def corpus_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_stratified_sample",
-    """
+#: the 40%-per-lang quality cut both members certify (same semantics,
+#: independent algorithms — the differential pair certifies both)
+_QUALITY_SAMPLE_ORACLE = """
     WITH scored AS (
         SELECT doc_id, lang,
                CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS INT) AS quality
@@ -446,7 +447,36 @@ def corpus_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     WHERE rn * 5 <= cnt * 2
     ORDER BY doc_id
-    """,
+    """
+
+
+def _quality_sample(name: str, doc: str, cut) -> None:
+    """Register one stratified quality sample: ``cut(scored)`` keeps the
+    top 2/5 of each lang stratum of ``(doc_id, lang, quality)`` rows by
+    quality, doc_id breaking ties."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        scored = _docs(spark, sf_dir).select(
+            "doc_id", "lang", bpe_token_count(F.col("text")).alias("quality")
+        )
+        return cut(scored).select("doc_id", "lang", "quality").orderBy("doc_id")
+
+    register(name, _QUALITY_SAMPLE_ORACLE, doc=doc)(build)
+
+
+def _ranked_cut(scored: DataFrame) -> DataFrame:
+    # languages-sized count table — always broadcastable
+    cnt = scored.groupBy("lang").agg(F.count("*").alias("cnt"))
+    return grouped_topk_salted(
+        scored.join(F.broadcast(cnt), "lang"),
+        ["lang"],
+        [F.desc("quality"), F.asc("doc_id")],
+        k=F.expr("(cnt * 2) div 5"),  # integer floor division — exact
+    )
+
+
+_quality_sample(
+    "quality_stratified_sample",
     doc="Stratified quality sampling: keep the top 40% of docs per language "
     "stratum by BPE-ish token count, deterministic tie-break on doc_id, "
     "integer-exact 40% cut (rank <= floor(cnt*2/5), exactly rn*5 <= cnt*2 "
@@ -462,23 +492,13 @@ def corpus_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single-task sort it claimed to remove survived (8.97x at 30x "
     "data); the rank formulation is kept as the differential twin "
     "quality_stratified_sample_ranked.",
-)
-def quality_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import stratified_fraction_cut
-
-    docs = _docs(spark, sf_dir)
-    scored = docs.select(
-        "doc_id", "lang", bpe_token_count(F.col("text")).alias("quality")
-    )
-    sampled = stratified_fraction_cut(
+    cut=lambda scored: stratified_fraction_cut(
         scored, ["lang"], "quality", "doc_id", num=2, den=5
-    )
-    return sampled.select("doc_id", "lang", "quality").orderBy("doc_id")
+    ),
+)
 
-
-@register(
+_quality_sample(
     "quality_stratified_sample_ranked",
-    None,  # oracle assigned below — shares quality_stratified_sample's SQL
     doc="DIFFERENTIAL TWIN of quality_stratified_sample: the same 40% "
     "cut as an explicit per-stratum RANK through the salted two-phase "
     "top-k (operators/skew.grouped_topk_salted) — the r7 formulation, "
@@ -489,31 +509,9 @@ def quality_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whole stratum in one task — measured 8.97x at 30x data (SCALE.md "
     "1c); the default query's histogram-threshold algorithm is the "
     "production shape.",
+    cut=_ranked_cut,
 )
-def quality_stratified_sample_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import grouped_topk_salted
 
-    docs = _docs(spark, sf_dir)
-    scored = docs.select(
-        "doc_id", "lang", bpe_token_count(F.col("text")).alias("quality")
-    )
-    # languages-sized count table — always broadcastable
-    cnt = scored.groupBy("lang").agg(F.count("*").alias("cnt"))
-    withk = scored.join(F.broadcast(cnt), "lang")
-    sampled = grouped_topk_salted(
-        withk,
-        ["lang"],
-        [F.desc("quality"), F.asc("doc_id")],
-        k=F.expr("(cnt * 2) div 5"),  # integer floor division — exact
-    )
-    return sampled.select("doc_id", "lang", "quality").orderBy("doc_id")
-
-
-# the twin shares the default query's oracle verbatim (same semantics,
-# independent algorithm — the differential pair certifies both)
-REGISTRY["quality_stratified_sample_ranked"].oracle = REGISTRY[
-    "quality_stratified_sample"
-].oracle
 
 
 @register(
@@ -2188,20 +2186,7 @@ def _dsir_model_cte(feats_sql: str) -> str:
 """
 
 
-_DSIR_MODEL_CTE = _dsir_model_cte(_DSIR_UNIGRAM_FEATS)
-_DSIR_MODEL_CTE_BIGRAM = _dsir_model_cte(_DSIR_BIGRAM_FEATS)
-
-
-def _dsir_model_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dsir import dsir_bucket_model
-
-    docs = _docs(spark, sf_dir)
-    return dsir_bucket_model(
-        docs, F.col("lang") == "en", n_buckets=_DSIR_B
-    )
-
-
-def _dsir_scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dsir_scored_df(spark: SparkSession, sf_dir: str, ngrams: int) -> DataFrame:
     """Fit + score sharing ONE tokenize/hash pass: the occurrences
     table (the dominant corpus-scan cost) is built once and persisted,
     feeding both the model aggregate and the scoring join (the
@@ -2211,20 +2196,99 @@ def _dsir_scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     occ = bounded_persist(
-        dsir_occurrences(docs, F.col("lang") == "en", n_buckets=_DSIR_B)
+        dsir_occurrences(
+            docs, F.col("lang") == "en", n_buckets=_DSIR_B, ngrams=ngrams
+        )
     )
     model = dsir_bucket_model(docs, F.col("lang") == "en", n_buckets=_DSIR_B, occ=occ)
     return dsir_scores(docs, model, n_buckets=_DSIR_B, occ=occ)
 
 
-@register(
-    "dsir_bucket_model",
-    f"""
-    WITH {_DSIR_MODEL_CTE}
+_DSIR_GUMBEL_SQL = quantized_sql(
+    "-ln(-ln(((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT)"
+    " + 1.0) / 4294967297.0))"
+)
+
+
+def _dsir_oracle(ngrams: int, kind: str) -> str:
+    """DuckDB twin of one DSIR query over hashed unigram (``ngrams=1``)
+    or unigram + bigram (``ngrams=2``) features: the bucket
+    ``"model"``, the per-doc ``"scores"`` or the Gumbel-top-k
+    ``"resample"``."""
+    feats = _DSIR_BIGRAM_FEATS if ngrams == 2 else _DSIR_UNIGRAM_FEATS
+    if kind == "model":
+        return f"""
+    WITH {_dsir_model_cte(feats)}
     SELECT bucket, n_target, n_source, logratio_e4
     FROM model ORDER BY bucket
-    """,
-    doc="DSIR importance model (Xie et al. 2023, hashed-unigram "
+    """
+    scored = f"""
+    WITH {_dsir_model_cte(feats)},
+    scores AS (
+        SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+               CAST(SUM(m.logratio_e4) AS BIGINT) AS score_e4
+        FROM occ o JOIN model m USING (bucket)
+        GROUP BY o.doc_id
+    ),
+    -- left join from the id set mirrors the engine's every-doc
+    -- contract (no-op on this fixture: every doc tokenizes)
+    alldocs AS (
+        SELECT d.doc_id,
+               COALESCE(s.n_tokens, 0) AS n_tokens,
+               COALESCE(s.score_e4, 0) AS score_e4
+        FROM documents d LEFT JOIN scores s USING (doc_id)
+    )"""
+    if kind == "scores":
+        return scored + """
+    SELECT doc_id, n_tokens, score_e4 FROM alldocs ORDER BY doc_id
+    """
+    return scored + f"""
+    SELECT doc_id, n_tokens, score_e4,
+           CAST(score_e4 + {_DSIR_GUMBEL_SQL} AS BIGINT) AS sample_key_e4
+    FROM alldocs
+    ORDER BY sample_key_e4 DESC, doc_id
+    LIMIT 100
+    """
+
+
+def _dsir_family(
+    ngrams: int, model_doc: str, scores_doc: str, resample_doc: str = ""
+) -> None:
+    """Register the DSIR bucket-model and importance-score queries over
+    hashed ``ngrams``-gram features (1: unigrams; 2: unigrams + bigrams,
+    names suffixed ``_bigram``), and the Gumbel-top-k resample when
+    ``resample_doc`` is given."""
+    from ..operators.dsir import dsir_bucket_model, dsir_resample
+
+    sfx = "_bigram" if ngrams == 2 else ""
+
+    def model(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return dsir_bucket_model(
+            _docs(spark, sf_dir),
+            F.col("lang") == "en",
+            n_buckets=_DSIR_B,
+            ngrams=ngrams,
+        ).orderBy("bucket")
+
+    def scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _dsir_scored_df(spark, sf_dir, ngrams).orderBy("doc_id")
+
+    def resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return dsir_resample(_dsir_scored_df(spark, sf_dir, ngrams), k=100)
+
+    members = [
+        ("dsir_bucket_model", "model", model, model_doc),
+        ("dsir_importance_scores", "scores", scores, scores_doc),
+    ]
+    if resample_doc:
+        members.append(("dsir_resample_topk", "resample", resample, resample_doc))
+    for name, kind, fn, doc in members:
+        register(name + sfx, _dsir_oracle(ngrams, kind), doc=doc)(fn)
+
+
+_dsir_family(
+    1,
+    model_doc="DSIR importance model (Xie et al. 2023, hashed-unigram "
     "variant): token occurrences hash into 64 md5-domain buckets; "
     "per-bucket add-one-smoothed log-ratio of the TARGET distribution "
     "(lang='en' docs) over the full SOURCE corpus, e4-quantized ONCE "
@@ -2233,30 +2297,7 @@ def _dsir_scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     "model is n_buckets rows BY CONSTRUCTION regardless of corpus "
     "size — the 100 TB fit is one partial-agg'd groupBy plus a "
     "64-row broadcast.",
-)
-def dsir_bucket_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dsir_model_df(spark, sf_dir).orderBy("bucket")
-
-
-@register(
-    "dsir_importance_scores",
-    f"""
-    WITH {_DSIR_MODEL_CTE},
-    scores AS (
-        SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(m.logratio_e4) AS BIGINT) AS score_e4
-        FROM occ o JOIN model m USING (bucket)
-        GROUP BY o.doc_id
-    )
-    -- left join from the id set mirrors the engine's every-doc
-    -- contract (no-op on this fixture: every doc tokenizes)
-    SELECT d.doc_id,
-           COALESCE(s.n_tokens, 0) AS n_tokens,
-           COALESCE(s.score_e4, 0) AS score_e4
-    FROM documents d LEFT JOIN scores s USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-    doc="Per-document DSIR importance score: exact integer sum of the "
+    scores_doc="Per-document DSIR importance score: exact integer sum of the "
     "64-bucket model's e4 log-ratios over the doc's token occurrences "
     "— positive means 'looks more like the target domain than the "
     "corpus average'. Plan: ONE tokenize+hash pass persisted and "
@@ -2269,40 +2310,7 @@ def dsir_bucket_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "score the model's smoothed default instead of silently dropping "
     "(cross-corpus scoring). Order-independent and overflow-safe: "
     "the summands are e4 BIGINTs, never doubles.",
-)
-def dsir_importance_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dsir_scored_df(spark, sf_dir).orderBy("doc_id")
-
-
-_DSIR_GUMBEL_SQL = quantized_sql(
-    "-ln(-ln(((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT)"
-    " + 1.0) / 4294967297.0))"
-)
-
-
-@register(
-    "dsir_resample_topk",
-    f"""
-    WITH {_DSIR_MODEL_CTE},
-    scores AS (
-        SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(m.logratio_e4) AS BIGINT) AS score_e4
-        FROM occ o JOIN model m USING (bucket)
-        GROUP BY o.doc_id
-    ),
-    alldocs AS (
-        SELECT d.doc_id,
-               COALESCE(s.n_tokens, 0) AS n_tokens,
-               COALESCE(s.score_e4, 0) AS score_e4
-        FROM documents d LEFT JOIN scores s USING (doc_id)
-    )
-    SELECT doc_id, n_tokens, score_e4,
-           CAST(score_e4 + {_DSIR_GUMBEL_SQL} AS BIGINT) AS sample_key_e4
-    FROM alldocs
-    ORDER BY sample_key_e4 DESC, doc_id
-    LIMIT 100
-    """,
-    doc="DSIR Gumbel-top-k importance RESAMPLE — the selection DSIR "
+    resample_doc="DSIR Gumbel-top-k importance RESAMPLE — the selection DSIR "
     "actually ships (resampling under the tilted distribution, not a "
     "mode-collapsed plain top-k): sample key = score_e4 + e4(Gumbel) "
     "with the Gumbel draw derived deterministically from md5(doc_id) "
@@ -2312,20 +2320,10 @@ _DSIR_GUMBEL_SQL = quantized_sql(
     "orderBy+limit plans as TakeOrdered: per-partition heaps, never "
     "a full sort — top-k of 10B docs is safe.",
 )
-def dsir_resample_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dsir import dsir_resample
 
-    return dsir_resample(_dsir_scored_df(spark, sf_dir), k=100)
-
-
-@register(
-    "dsir_bucket_model_bigram",
-    f"""
-    WITH {_DSIR_MODEL_CTE_BIGRAM}
-    SELECT bucket, n_target, n_source, logratio_e4
-    FROM model ORDER BY bucket
-    """,
-    doc="DSIR importance model over the paper's FULL feature space — "
+_dsir_family(
+    2,
+    model_doc="DSIR importance model over the paper's FULL feature space — "
     "hashed unigrams + adjacent bigrams (ngrams=2; Xie et al. 2023 "
     "§3: bigram features are what make the importance model sensitive "
     "to domain phrasing, not just vocabulary). The unigram-only "
@@ -2335,35 +2333,7 @@ def dsir_resample_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with n tokens emits 2n-1 occurrences, still shuffle-free into "
     "the same 64-row groupBy; the oracle re-derives bigrams "
     "positionally from the token array.",
-)
-def dsir_bucket_model_bigram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dsir import dsir_bucket_model
-
-    return dsir_bucket_model(
-        _docs(spark, sf_dir),
-        F.col("lang") == "en",
-        n_buckets=_DSIR_B,
-        ngrams=2,
-    ).orderBy("bucket")
-
-
-@register(
-    "dsir_importance_scores_bigram",
-    f"""
-    WITH {_DSIR_MODEL_CTE_BIGRAM},
-    scores AS (
-        SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(m.logratio_e4) AS BIGINT) AS score_e4
-        FROM occ o JOIN model m USING (bucket)
-        GROUP BY o.doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(s.n_tokens, 0) AS n_tokens,
-           COALESCE(s.score_e4, 0) AS score_e4
-    FROM documents d LEFT JOIN scores s USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-    doc="Per-document DSIR score under the unigram+bigram feature "
+    scores_doc="Per-document DSIR score under the unigram+bigram feature "
     "space (the paper's production configuration; "
     "dsir_importance_scores is the unigram differential twin). "
     "n_tokens counts FEATURE occurrences — 2n-1 for an n-token doc. "
@@ -2372,24 +2342,7 @@ def dsir_bucket_model_bigram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and scoring, 64-row broadcast model join, every-doc left-join "
     "pin.",
 )
-def dsir_importance_scores_bigram_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.cache import bounded_persist
-    from ..operators.dsir import dsir_bucket_model, dsir_occurrences, dsir_scores
 
-    docs = _docs(spark, sf_dir)
-    occ = bounded_persist(
-        dsir_occurrences(
-            docs, F.col("lang") == "en", n_buckets=_DSIR_B, ngrams=2
-        )
-    )
-    model = dsir_bucket_model(
-        docs, F.col("lang") == "en", n_buckets=_DSIR_B, occ=occ
-    )
-    return dsir_scores(docs, model, n_buckets=_DSIR_B, occ=occ).orderBy(
-        "doc_id"
-    )
 
 
 # --- hashed bigram LM perplexity (operators/ngram_lm.py) -------------
@@ -2405,79 +2358,325 @@ from ..operators.ngram_lm import global_floor_e4 as _lm_floor  # noqa: E402
 
 _LM_B1, _LM_B12 = 64, 1024
 
-_LM_CTES = rf"""
-    big AS (
-        SELECT doc_id, lang, t[i] AS w1, t[i+1] AS w2
-        FROM (
-            SELECT doc_id, lang,
-                   regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS t
-            FROM documents
-        ), LATERAL (SELECT unnest(range(1, len(t))) AS i)
-    ),
-    ev AS (
-        SELECT doc_id, lang,
+# --- the CCNet composition: line dedup -> LM scoring -> per-lang ----
+
+from .queries_text import _LINE_CTE as _CC_LINE_CTE  # noqa: E402
+from .queries_text import _lined_docs as _cc_lined_docs  # noqa: E402
+
+# --- per-language LM models (r11 — CCNet's actual construction) ------
+#
+# Wenzek et al. fit ONE LM PER LANGUAGE on that language's target
+# corpus (Wikipedia-lang) and score each shard under its own model;
+# the r10 global en-target model ranks non-en shards by "how en-like",
+# not by fluency (VERDICT r10 gap #1). The recast: a fixed slice of
+# sources (src0-src3) plays Wikipedia's role as the per-lang target —
+# fit is keyed by lang on the target subset, scoring is cross-corpus
+# (src4+ docs hit unseen pairs/contexts, exercising both smoothed
+# floors within their own language's model). The global-model queries
+# (key=()) are retained as differential twins.
+
+_LM_TARGET_SOURCES = ("src0", "src1", "src2", "src3")
+_LM_TARGET_SQL = "source IN ('src0', 'src1', 'src2', 'src3')"
+
+
+def _lm_models(docs: DataFrame, key: tuple[str, ...]) -> tuple[DataFrame, DataFrame]:
+    """Fit the pair/ctx models: ONE model on the lang='en' target
+    (``key=()``), or one per language (``key=("lang",)``) on the
+    target-source slice (src0-src3 playing Wikipedia-lang). Bounded BY
+    CONSTRUCTION at n_lang * 64 * 1024 and n_lang * 64 rows — languages
+    are an enum, not data-sized, so both stay honest broadcasts."""
+    from ..operators.ngram_lm import bigram_events, ngram_lm_fit
+
+    target = (
+        F.col("source").isin(*_LM_TARGET_SOURCES) if key else F.col("lang") == "en"
+    )
+    fit_ev = bigram_events(docs.filter(target), extra_cols=list(key)).select(
+        *key, "b1", "b12"
+    )
+    return ngram_lm_fit(fit_ev, key_cols=key)
+
+
+def _lm_means(docs: DataFrame, key: tuple[str, ...]) -> DataFrame:
+    """``(doc_id, lang, mean_lp_e4)``: each doc's mean per-event LM
+    log-prob under the ``key`` models, e4-quantized from the exact
+    integer sums — the only double is one division of identical
+    integers, then re-quantized, so ordering and ties are
+    engine-identical."""
+    from ..operators.ngram_lm import ngram_lm_scores
+
+    pair_model, ctx_model = _lm_models(docs, key)
+    scores = ngram_lm_scores(docs, pair_model, ctx_model, key_cols=key)
+    return scores.join(docs.select("doc_id", "lang"), "doc_id").select(
+        "doc_id",
+        "lang",
+        F.coalesce(
+            quantized(
+                F.col("logprob_sum_e4").cast("double") / F.col("n_bigrams"),
+                0,
+            ),
+            F.lit(0),
+        ).alias("mean_lp_e4"),
+    )
+
+
+def _lm_events_sql(src: str, text_col: str) -> str:
+    """Hashed bigram events ``(doc_id, lang, source, b1, b12)`` of
+    ``text_col`` over the rows of ``src``."""
+    return rf"""
+        SELECT doc_id, lang, source,
                (('0x' || substr(md5(w1), 1, 4))::INT % {_LM_B1}) AS b1,
                (('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::INT % {_LM_B12}) AS b12
-        FROM big
+        FROM (
+            SELECT doc_id, lang, source, t[i] AS w1, t[i+1] AS w2
+            FROM (
+                SELECT doc_id, lang, source,
+                       regexp_split_to_array(trim(coalesce({text_col}, '')), '\s+') AS t
+                FROM {src}
+            ), LATERAL (SELECT unnest(range(1, len(t))) AS i)
+        )"""
+
+
+def _lm_oracle(key: tuple[str, ...], kind: str) -> str:
+    """DuckDB twin of one LM/CCNet query under the ``key`` models (see
+    :func:`_lm_models`): the context ``"model"`` table, per-doc
+    ``"perplexity"`` sums, the NTILE(3) ``"buckets"`` report, or the
+    line dedup -> LM scoring ``"funnel"`` rollup per lang."""
+    k = "".join(f"{c}, " for c in key)
+    target = _LM_TARGET_SQL if key else "lang = 'en'"
+    floor = quantized_sql(f"ln(1.0 / (c1 + {float(_LM_B12)}))")
+
+    def scored(events: str) -> str:
+        on = "".join(f"m.{c} = e.{c} AND " for c in key)
+        on_ctx = "".join(f"c.{c} = e.{c} AND " for c in key)
+        return f"""
+        SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+               CAST(SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)}))
+                    AS BIGINT) AS logprob_sum_e4
+        FROM {events} e
+        LEFT JOIN model m ON {on}m.b1 = e.b1 AND m.b12 = e.b12
+        LEFT JOIN ctxd c ON {on_ctx}c.b1 = e.b1
+        GROUP BY e.doc_id"""
+
+    ctes = f"""
+    ev AS ({_lm_events_sql("documents", "text")}
     ),
-    fit AS (SELECT b1, b12 FROM ev WHERE lang = 'en'),
-    ctx AS (SELECT b1, COUNT(*) AS c1 FROM fit GROUP BY b1),
-    pairs AS (SELECT b1, b12, COUNT(*) AS c12 FROM fit GROUP BY b1, b12),
+    fit AS (SELECT {k}b1, b12 FROM ev WHERE {target}),
+    ctx AS (SELECT {k}b1, COUNT(*) AS c1 FROM fit GROUP BY {k}b1),
+    pairs AS (SELECT {k}b1, b12, COUNT(*) AS c12 FROM fit GROUP BY {k}b1, b12),
     model AS (
-        SELECT p.b1, p.b12,
-               {quantized_sql(f'ln((p.c12 + 1.0) / (c.c1 + {float(_LM_B12)}))')} AS lp_e4
-        FROM pairs p JOIN ctx c USING (b1)
+        SELECT {k}b1, b12,
+               {quantized_sql(f'ln((c12 + 1.0) / (c1 + {float(_LM_B12)}))')} AS lp_e4
+        FROM pairs JOIN ctx USING ({k}b1)
     ),
-    ctxd AS (
-        SELECT b1, {quantized_sql(f'ln(1.0 / (c1 + {float(_LM_B12)}))')} AS floor_e4
-        FROM ctx
+    ctxd AS (SELECT {k}b1, {floor} AS floor_e4 FROM ctx),
+    scored AS ({scored("ev")}
+    )"""
+    if kind == "model":
+        return f"""
+    WITH {ctes}
+    SELECT {k}b1, CAST(c1 AS BIGINT) AS c1, {floor} AS floor_e4
+    FROM ctx ORDER BY {k}b1
+    """
+    if kind == "perplexity":
+        return f"""
+    WITH {ctes}
+    SELECT d.doc_id, COALESCE(s.n_bigrams, 0) AS n_bigrams,
+           COALESCE(s.logprob_sum_e4, 0) AS logprob_sum_e4
+    FROM documents d LEFT JOIN scored s USING (doc_id)
+    ORDER BY d.doc_id
+    """
+    if kind == "buckets":
+        return f"""
+    WITH {ctes},
+    means AS (
+        SELECT d.doc_id, d.lang,
+               COALESCE({quantized_sql(
+                   'CAST(s.logprob_sum_e4 AS DOUBLE) / s.n_bigrams', 0
+               )}, 0) AS mean_lp_e4
+        FROM documents d LEFT JOIN scored s USING (doc_id)
+    ),
+    tiled AS (
+        SELECT lang, mean_lp_e4,
+               NTILE(3) OVER (
+                   PARTITION BY lang ORDER BY mean_lp_e4 DESC, doc_id
+               ) AS bucket
+        FROM means
     )
-"""
+    SELECT lang, CAST(bucket AS INT) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(MAX(mean_lp_e4) AS BIGINT) AS best_mean_lp_e4,
+           CAST(MIN(mean_lp_e4) AS BIGINT) AS worst_mean_lp_e4
+    FROM tiled GROUP BY lang, bucket ORDER BY lang, bucket
+    """
+    # kept lines take their doc's lang (and source) from the document table
+    return f"""
+    WITH {_CC_LINE_CTE},
+    heavy AS (
+        SELECT seg FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
+    ),
+    kept AS (
+        SELECT s.doc_id, s.seg_id, s.seg
+        FROM lseg s LEFT JOIN heavy h ON s.seg = h.seg
+        WHERE h.seg IS NULL
+    ),{ctes},
+    kev AS ({_lm_events_sql("kept JOIN documents USING (doc_id)", "seg")}
+    ),
+    lm AS ({scored("kev")}
+    ),
+    tot AS (SELECT doc_id, COUNT(*) AS n_lines FROM lseg GROUP BY doc_id),
+    keptn AS (SELECT doc_id, COUNT(*) AS n_kept FROM kept GROUP BY doc_id)
+    SELECT d.lang,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(t.n_lines) AS BIGINT) AS n_lines,
+           CAST(SUM(t.n_lines - COALESCE(k.n_kept, 0)) AS BIGINT) AS n_lines_removed,
+           CAST(SUM(COALESCE(l.n_bigrams, 0)) AS BIGINT) AS n_bigrams,
+           CAST(SUM(COALESCE(l.logprob_sum_e4, 0)) AS BIGINT) AS logprob_sum_e4
+    FROM documents d
+    JOIN tot t USING (doc_id)
+    LEFT JOIN keptn k USING (doc_id)
+    LEFT JOIN lm l USING (doc_id)
+    GROUP BY d.lang ORDER BY d.lang
+    """
 
 
-@register(
-    "ngram_lm_ctx_model",
-    f"""
-    WITH {_LM_CTES}
-    SELECT b1, CAST(c1 AS BIGINT) AS c1,
-           {quantized_sql(f'ln(1.0 / (c1 + {float(_LM_B12)}))')} AS floor_e4
-    FROM ctx ORDER BY b1
-    """,
-    doc="Context table of the hashed bigram LM (CCNet's quality-tier "
+def _lm_family(
+    key: tuple[str, ...],
+    model_doc: str,
+    perplexity_doc: str,
+    buckets_doc: str,
+    funnel_doc: str,
+) -> None:
+    """Register the LM context-model, perplexity, CCNet ppl-bucket and
+    CCNet funnel queries under the global en-target model (``key=()``)
+    or the per-language models (``key=("lang",)``, names marked
+    ``perlang``)."""
+    from ..operators.ngram_lm import bigram_events, ngram_lm_scores
+
+    def model(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _, ctx_model = _lm_models(_docs(spark, sf_dir), key)
+        return ctx_model.orderBy(*key, "b1")
+
+    def perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _docs(spark, sf_dir)
+        pair_model, ctx_model = _lm_models(docs, key)
+        return ngram_lm_scores(docs, pair_model, ctx_model, key_cols=key).orderBy(
+            "doc_id"
+        )
+
+    def buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tiled = _lm_means(_docs(spark, sf_dir), key).withColumn(
+            "bucket",
+            F.ntile(3).over(
+                Window.partitionBy("lang").orderBy(
+                    F.desc("mean_lp_e4"), F.asc("doc_id")
+                )
+            ),
+        )
+        return (
+            tiled.groupBy("lang", "bucket")
+            .agg(
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.max("mean_lp_e4").cast("bigint").alias("best_mean_lp_e4"),
+                F.min("mean_lp_e4").cast("bigint").alias("worst_mean_lp_e4"),
+            )
+            .select(
+                "lang",
+                F.col("bucket").cast("int").alias("bucket"),
+                "n_docs",
+                "best_mean_lp_e4",
+                "worst_mean_lp_e4",
+            )
+            .orderBy("lang", "bucket")
+        )
+
+    def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..operators.boilerplate import (
+            _with_hashes,
+            doc_segments,
+            heavy_segment_hashes,
+        )
+        from ..operators.cache import bounded_persist
+
+        docs = _docs(spark, sf_dir)
+        segs = bounded_persist(
+            _with_hashes(doc_segments(_cc_lined_docs(docs), unit="line"))
+        )
+        heavy = heavy_segment_hashes(segs, min_df=3)
+        kept = segs.join(heavy, ["__h", "__h2"], "left_anti")
+
+        pair_model, ctx_model = _lm_models(docs, key)
+        floor = F.lit(_lm_floor(_LM_B12)).cast("bigint")
+        kept_text = kept.select("doc_id", "seg")
+        if key:
+            kept_text = kept_text.join(docs.select("doc_id", *key), "doc_id")
+        per_doc_lm = (
+            bigram_events(kept_text, text_col="seg", extra_cols=list(key))
+            .join(
+                F.broadcast(pair_model.select(*key, "b1", "b12", "lp_e4")),
+                [*key, "b1", "b12"],
+                "left",
+            )
+            .join(
+                F.broadcast(ctx_model.select(*key, "b1", "floor_e4")),
+                [*key, "b1"],
+                "left",
+            )
+            .select("doc_id", F.coalesce("lp_e4", "floor_e4", floor).alias("__lp"))
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_bigrams"),
+                F.sum("__lp").alias("lp"),
+            )
+        )
+        totals = segs.groupBy("doc_id").agg(F.count("*").alias("n_lines"))
+        keptn = kept.groupBy("doc_id").agg(F.count("*").alias("n_kept"))
+        return (
+            docs.select("doc_id", "lang")
+            .join(totals, "doc_id")
+            .join(keptn, "doc_id", "left")
+            .join(per_doc_lm, "doc_id", "left")
+            .groupBy("lang")
+            .agg(
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.sum("n_lines").cast("bigint").alias("n_lines"),
+                F.sum(
+                    F.col("n_lines") - F.coalesce("n_kept", F.lit(0))
+                ).cast("bigint").alias("n_lines_removed"),
+                F.sum(F.coalesce("n_bigrams", F.lit(0)))
+                .cast("bigint")
+                .alias("n_bigrams"),
+                F.sum(F.coalesce("lp", F.lit(0)))
+                .cast("bigint")
+                .alias("logprob_sum_e4"),
+            )
+            .orderBy("lang")
+        )
+
+    names = (
+        ("ngram_lm_perlang_model", "ngram_lm_perplexity_perlang",
+         "ccnet_ppl_buckets_perlang", "ccnet_funnel_perlang")
+        if key
+        else ("ngram_lm_ctx_model", "ngram_lm_perplexity", "ccnet_ppl_buckets",
+              "ccnet_funnel")
+    )
+    for name, kind, fn, doc in zip(
+        names,
+        ("model", "perplexity", "buckets", "funnel"),
+        (model, perplexity, buckets, funnel),
+        (model_doc, perplexity_doc, buckets_doc, funnel_doc),
+    ):
+        register(name, _lm_oracle(key, kind), doc=doc)(fn)
+
+
+_lm_family(
+    (),
+    model_doc="Context table of the hashed bigram LM (CCNet's quality-tier "
     "model, operators/ngram_lm.py): per md5-domain context bucket, "
     "the fit-corpus event total and the smoothed unseen-pair floor "
     "ln(1/(c1+B12)). At most ctx_buckets=64 rows BY CONSTRUCTION at "
     "any corpus size — with the 65,536-row-bounded pair table these "
     "are the honest broadcasts the scoring join rides.",
-)
-def ngram_lm_ctx_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ngram_lm import bigram_events, ngram_lm_fit
-
-    docs = _docs(spark, sf_dir)
-    ev = bigram_events(docs, extra_cols=["lang"])
-    _, ctx = ngram_lm_fit(ev.filter(F.col("lang") == "en").select("b1", "b12"))
-    return ctx.orderBy("b1")
-
-
-@register(
-    "ngram_lm_perplexity",
-    f"""
-    WITH {_LM_CTES},
-    scored AS (
-        SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)}))
-                    AS BIGINT) AS logprob_sum_e4
-        FROM ev e
-        LEFT JOIN model m ON m.b1 = e.b1 AND m.b12 = e.b12
-        LEFT JOIN ctxd c ON c.b1 = e.b1
-        GROUP BY e.doc_id
-    )
-    SELECT d.doc_id, COALESCE(s.n_bigrams, 0) AS n_bigrams,
-           COALESCE(s.logprob_sum_e4, 0) AS logprob_sum_e4
-    FROM documents d LEFT JOIN scored s USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-    doc="Hashed bigram LM document scoring — CCNet's (Wenzek et al. "
+    perplexity_doc="Hashed bigram LM document scoring — CCNet's (Wenzek et al. "
     "2020) perplexity quality gate recast oracle-exact: add-one-"
     "smoothed P(pair bucket | context bucket) fitted on the lang='en' "
     "target subset, every document scored with the EXACT INTEGER sum "
@@ -2494,56 +2693,7 @@ def ngram_lm_ctx_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded at 64*1024 rows BY CONSTRUCTION and rides explicit "
     "broadcasts; per-doc scoring is one groupBy integer sum — "
     "order-independent at any parallelism.",
-)
-def ngram_lm_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ngram_lm import (
-        bigram_events,
-        ngram_lm_fit,
-        ngram_lm_scores,
-    )
-
-    docs = _docs(spark, sf_dir)
-    ev = bigram_events(docs, extra_cols=["lang"])
-    pair_model, ctx_model = ngram_lm_fit(
-        ev.filter(F.col("lang") == "en").select("b1", "b12")
-    )
-    return ngram_lm_scores(docs, pair_model, ctx_model).orderBy("doc_id")
-
-
-@register(
-    "ccnet_ppl_buckets",
-    f"""
-    WITH {_LM_CTES},
-    scored AS (
-        SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)}))
-                    AS BIGINT) AS lp
-        FROM ev e
-        LEFT JOIN model m ON m.b1 = e.b1 AND m.b12 = e.b12
-        LEFT JOIN ctxd c ON c.b1 = e.b1
-        GROUP BY e.doc_id
-    ),
-    means AS (
-        SELECT d.doc_id, d.lang,
-               COALESCE({quantized_sql(
-                   'CAST(s.lp AS DOUBLE) / s.n_bigrams', 0
-               )}, 0) AS mean_lp_e4
-        FROM documents d LEFT JOIN scored s USING (doc_id)
-    ),
-    tiled AS (
-        SELECT lang, mean_lp_e4,
-               NTILE(3) OVER (
-                   PARTITION BY lang ORDER BY mean_lp_e4 DESC, doc_id
-               ) AS bucket
-        FROM means
-    )
-    SELECT lang, CAST(bucket AS INT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MAX(mean_lp_e4) AS BIGINT) AS best_mean_lp_e4,
-           CAST(MIN(mean_lp_e4) AS BIGINT) AS worst_mean_lp_e4
-    FROM tiled GROUP BY lang, bucket ORDER BY lang, bucket
-    """,
-    doc="TWIN — at scale use ccnet_ppl_buckets_approx (approx-quantile "
+    buckets_doc="TWIN — at scale use ccnet_ppl_buckets_approx (approx-quantile "
     "thresholds + codegen filter; this exact NTILE form is the "
     "oracle-checked reference semantics, its sort per-lang over "
     "NARROW (lang, mean, id) rows). CCNet's head/middle/tail "
@@ -2557,113 +2707,7 @@ def ngram_lm_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "each bucket's size and boundary means — the thresholds a "
     "production run would publish. ccnet_ppl_buckets_perlang is the "
     "same mechanism under the per-language models.",
-)
-def ccnet_ppl_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.ngram_lm import (
-        bigram_events,
-        ngram_lm_fit,
-        ngram_lm_scores,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pair_model, ctx_model = ngram_lm_fit(
-        bigram_events(docs.filter(F.col("lang") == "en")).select("b1", "b12")
-    )
-    scores = ngram_lm_scores(docs, pair_model, ctx_model)
-    means = scores.join(docs.select("doc_id", "lang"), "doc_id").select(
-        "doc_id",
-        "lang",
-        F.coalesce(
-            quantized(
-                F.col("logprob_sum_e4").cast("double") / F.col("n_bigrams"),
-                0,
-            ),
-            F.lit(0),
-        ).alias("mean_lp_e4"),
-    )
-    tiled = means.withColumn(
-        "bucket",
-        F.ntile(3).over(
-            Window.partitionBy("lang").orderBy(
-                F.desc("mean_lp_e4"), F.asc("doc_id")
-            )
-        ),
-    )
-    return (
-        tiled.groupBy("lang", "bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.max("mean_lp_e4").cast("bigint").alias("best_mean_lp_e4"),
-            F.min("mean_lp_e4").cast("bigint").alias("worst_mean_lp_e4"),
-        )
-        .select(
-            "lang",
-            F.col("bucket").cast("int").alias("bucket"),
-            "n_docs",
-            "best_mean_lp_e4",
-            "worst_mean_lp_e4",
-        )
-        .orderBy("lang", "bucket")
-    )
-
-
-# --- the CCNet composition: line dedup -> LM scoring -> per-lang ----
-
-from .queries_text import _LINE_CTE as _CC_LINE_CTE  # noqa: E402
-from .queries_text import _lined_docs as _cc_lined_docs  # noqa: E402
-
-
-@register(
-    "ccnet_funnel",
-    f"""
-    WITH {_CC_LINE_CTE},
-    heavy AS (
-        SELECT seg FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM lseg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    {_LM_CTES.strip().lstrip()},
-    kev AS (
-        SELECT doc_id,
-               (('0x' || substr(md5(w1), 1, 4))::INT % {_LM_B1}) AS b1,
-               (('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::INT % {_LM_B12}) AS b12
-        FROM (
-            SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-            FROM (
-                SELECT doc_id,
-                       regexp_split_to_array(trim(coalesce(seg, '')), '\\s+') AS t
-                FROM kept
-            ), LATERAL (SELECT unnest(range(1, len(t))) AS i)
-        )
-    ),
-    lm AS (
-        SELECT e.doc_id, COUNT(*) AS n_bigrams,
-               SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)})) AS lp
-        FROM kev e
-        LEFT JOIN model m ON m.b1 = e.b1 AND m.b12 = e.b12
-        LEFT JOIN ctxd c ON c.b1 = e.b1
-        GROUP BY e.doc_id
-    ),
-    tot AS (SELECT doc_id, COUNT(*) AS n_lines FROM lseg GROUP BY doc_id),
-    keptn AS (SELECT doc_id, COUNT(*) AS n_kept FROM kept GROUP BY doc_id)
-    SELECT d.lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(t.n_lines) AS BIGINT) AS n_lines,
-           CAST(SUM(t.n_lines - COALESCE(k.n_kept, 0)) AS BIGINT) AS n_lines_removed,
-           CAST(SUM(COALESCE(l.n_bigrams, 0)) AS BIGINT) AS n_bigrams,
-           CAST(SUM(COALESCE(l.lp, 0)) AS BIGINT) AS logprob_sum_e4
-    FROM documents d
-    JOIN tot t USING (doc_id)
-    LEFT JOIN keptn k USING (doc_id)
-    LEFT JOIN lm l USING (doc_id)
-    GROUP BY d.lang ORDER BY d.lang
-    """,
-    doc="The CCNet pipeline composition in ONE plan (Wenzek et al. "
+    funnel_doc="The CCNet pipeline composition in ONE plan (Wenzek et al. "
     "2020 stage order): per-language shard rollup of LINE dedup "
     "followed by LM quality scoring — every heavy line (min_df=3 on "
     "the multi-line corpus) drops whole, the KEPT lines' adjacent "
@@ -2680,151 +2724,10 @@ from .queries_text import _lined_docs as _cc_lined_docs  # noqa: E402
     "ordering: scoring BEFORE line dedup would let boilerplate "
     "n-grams dominate the perplexity head.",
 )
-def ccnet_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import (
-        _with_hashes,
-        doc_segments,
-        heavy_segment_hashes,
-    )
-    from ..operators.cache import bounded_persist
-    from ..operators.ngram_lm import (
-        bigram_events,
-        global_floor_e4,
-        ngram_lm_fit,
-    )
 
-    docs = _docs(spark, sf_dir)
-    segs = bounded_persist(
-        _with_hashes(doc_segments(_cc_lined_docs(docs), unit="line"))
-    )
-    heavy = heavy_segment_hashes(segs, min_df=3)
-    kept = segs.join(heavy, ["__h", "__h2"], "left_anti")
-
-    pair_model, ctx_model = ngram_lm_fit(
-        bigram_events(docs.filter(F.col("lang") == "en")).select("b1", "b12")
-    )
-    floor = F.lit(global_floor_e4(_LM_B12)).cast("bigint")
-    per_doc_lm = (
-        bigram_events(kept.select("doc_id", "seg"), text_col="seg")
-        .join(
-            F.broadcast(pair_model.select("b1", "b12", "lp_e4")),
-            ["b1", "b12"],
-            "left",
-        )
-        .join(F.broadcast(ctx_model.select("b1", "floor_e4")), "b1", "left")
-        .select("doc_id", F.coalesce("lp_e4", "floor_e4", floor).alias("__lp"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum("__lp").alias("lp"),
-        )
-    )
-    totals = segs.groupBy("doc_id").agg(F.count("*").alias("n_lines"))
-    keptn = kept.groupBy("doc_id").agg(F.count("*").alias("n_kept"))
-    return (
-        docs.select("doc_id", "lang")
-        .join(totals, "doc_id")
-        .join(keptn, "doc_id", "left")
-        .join(per_doc_lm, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_lines").cast("bigint").alias("n_lines"),
-            F.sum(
-                F.col("n_lines") - F.coalesce("n_kept", F.lit(0))
-            ).cast("bigint").alias("n_lines_removed"),
-            F.sum(F.coalesce("n_bigrams", F.lit(0)))
-            .cast("bigint")
-            .alias("n_bigrams"),
-            F.sum(F.coalesce("lp", F.lit(0)))
-            .cast("bigint")
-            .alias("logprob_sum_e4"),
-        )
-        .orderBy("lang")
-    )
-
-
-# --- per-language LM models (r11 — CCNet's actual construction) ------
-#
-# Wenzek et al. fit ONE LM PER LANGUAGE on that language's target
-# corpus (Wikipedia-lang) and score each shard under its own model;
-# the r10 global en-target model ranks non-en shards by "how en-like",
-# not by fluency (VERDICT r10 gap #1). The recast: a fixed slice of
-# sources (src0-src3) plays Wikipedia's role as the per-lang target —
-# fit is keyed by lang on the target subset, scoring is cross-corpus
-# (src4+ docs hit unseen pairs/contexts, exercising both smoothed
-# floors within their own language's model). The global-model queries
-# above are retained as differential twins.
-
-_LM_TARGET_SOURCES = ("src0", "src1", "src2", "src3")
-_LM_TARGET_SQL = "source IN ('src0', 'src1', 'src2', 'src3')"
-
-_LM_PERLANG_CTES = rf"""
-    bigL AS (
-        SELECT doc_id, lang, source, t[i] AS w1, t[i+1] AS w2
-        FROM (
-            SELECT doc_id, lang, source,
-                   regexp_split_to_array(trim(coalesce(text, '')), '\s+') AS t
-            FROM documents
-        ), LATERAL (SELECT unnest(range(1, len(t))) AS i)
-    ),
-    evL AS (
-        SELECT doc_id, lang, source,
-               (('0x' || substr(md5(w1), 1, 4))::INT % {_LM_B1}) AS b1,
-               (('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::INT % {_LM_B12}) AS b12
-        FROM bigL
-    ),
-    fitL AS (SELECT lang, b1, b12 FROM evL WHERE {_LM_TARGET_SQL}),
-    ctxL AS (SELECT lang, b1, COUNT(*) AS c1 FROM fitL GROUP BY lang, b1),
-    pairsL AS (
-        SELECT lang, b1, b12, COUNT(*) AS c12 FROM fitL GROUP BY lang, b1, b12
-    ),
-    modelL AS (
-        SELECT p.lang, p.b1, p.b12,
-               {quantized_sql(f'ln((p.c12 + 1.0) / (c.c1 + {float(_LM_B12)}))')} AS lp_e4
-        FROM pairsL p JOIN ctxL c ON p.lang = c.lang AND p.b1 = c.b1
-    ),
-    ctxdL AS (
-        SELECT lang, b1,
-               {quantized_sql(f'ln(1.0 / (c1 + {float(_LM_B12)}))')} AS floor_e4
-        FROM ctxL
-    ),
-    scoredL AS (
-        SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)}))
-                    AS BIGINT) AS logprob_sum_e4
-        FROM evL e
-        LEFT JOIN modelL m
-          ON m.lang = e.lang AND m.b1 = e.b1 AND m.b12 = e.b12
-        LEFT JOIN ctxdL c ON c.lang = e.lang AND c.b1 = e.b1
-        GROUP BY e.doc_id
-    )
-"""
-
-
-def _lm_perlang_models(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fit the per-language pair/ctx models on the target-source slice
-    (src0-src3 playing Wikipedia-lang). Bounded BY CONSTRUCTION at
-    n_lang * 64 * 1024 and n_lang * 64 rows — languages are an enum,
-    not data-sized, so both stay honest broadcasts."""
-    from ..operators.ngram_lm import bigram_events, ngram_lm_fit
-
-    fit_ev = bigram_events(
-        docs.filter(F.col("source").isin(*_LM_TARGET_SOURCES)),
-        extra_cols=["lang"],
-    ).select("lang", "b1", "b12")
-    return ngram_lm_fit(fit_ev, key_cols=("lang",))
-
-
-@register(
-    "ngram_lm_perlang_model",
-    f"""
-    WITH {_LM_PERLANG_CTES}
-    SELECT lang, b1, CAST(c1 AS BIGINT) AS c1,
-           {quantized_sql(f'ln(1.0 / (c1 + {float(_LM_B12)}))')} AS floor_e4
-    FROM ctxL ORDER BY lang, b1
-    """,
-    doc="Per-LANGUAGE context tables of the hashed bigram LM — CCNet's "
+_lm_family(
+    ("lang",),
+    model_doc="Per-LANGUAGE context tables of the hashed bigram LM — CCNet's "
     "actual construction (one LM per language, fit on that language's "
     "own target corpus; the src0-src3 slice plays Wikipedia-lang): per "
     "(lang, context bucket), the fit-corpus event total and the "
@@ -2832,22 +2735,7 @@ def _lm_perlang_models(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     "CONSTRUCTION — the language set is an enum, not data-sized, so "
     "the per-lang models stay honest broadcasts at any corpus size "
     "(with the n_lang*65,536-bounded pair tables).",
-)
-def ngram_lm_perlang_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, ctx_model = _lm_perlang_models(_docs(spark, sf_dir))
-    return ctx_model.orderBy("lang", "b1")
-
-
-@register(
-    "ngram_lm_perplexity_perlang",
-    f"""
-    WITH {_LM_PERLANG_CTES}
-    SELECT d.doc_id, COALESCE(s.n_bigrams, 0) AS n_bigrams,
-           COALESCE(s.logprob_sum_e4, 0) AS logprob_sum_e4
-    FROM documents d LEFT JOIN scoredL s USING (doc_id)
-    ORDER BY d.doc_id
-    """,
-    doc="Per-language LM document scoring — closes the CCNet-mechanism "
+    perplexity_doc="Per-language LM document scoring — closes the CCNet-mechanism "
     "gap of the global twin (ngram_lm_perplexity, which fits ONE "
     "en-target model and ranks non-en shards by how en-like they "
     "read): every document scores under the model of its OWN "
@@ -2859,44 +2747,7 @@ def ngram_lm_perlang_model_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "left-join pin. Plan: one zip_with event pass per side; the model "
     "joins gain lang as a key but stay bounded broadcasts "
     "(n_lang*65,536 rows); scoring is one groupBy integer sum.",
-)
-def ngram_lm_perplexity_perlang_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.ngram_lm import ngram_lm_scores
-
-    docs = _docs(spark, sf_dir)
-    pair_model, ctx_model = _lm_perlang_models(docs)
-    return ngram_lm_scores(
-        docs, pair_model, ctx_model, key_cols=("lang",)
-    ).orderBy("doc_id")
-
-
-@register(
-    "ccnet_ppl_buckets_perlang",
-    f"""
-    WITH {_LM_PERLANG_CTES},
-    means AS (
-        SELECT d.doc_id, d.lang,
-               COALESCE({quantized_sql(
-                   'CAST(s.logprob_sum_e4 AS DOUBLE) / s.n_bigrams', 0
-               )}, 0) AS mean_lp_e4
-        FROM documents d LEFT JOIN scoredL s USING (doc_id)
-    ),
-    tiled AS (
-        SELECT lang, mean_lp_e4,
-               NTILE(3) OVER (
-                   PARTITION BY lang ORDER BY mean_lp_e4 DESC, doc_id
-               ) AS bucket
-        FROM means
-    )
-    SELECT lang, CAST(bucket AS INT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(MAX(mean_lp_e4) AS BIGINT) AS best_mean_lp_e4,
-           CAST(MIN(mean_lp_e4) AS BIGINT) AS worst_mean_lp_e4
-    FROM tiled GROUP BY lang, bucket ORDER BY lang, bucket
-    """,
-    doc="CCNet's head/middle/tail selection under the PER-LANGUAGE "
+    buckets_doc="CCNet's head/middle/tail selection under the PER-LANGUAGE "
     "models — the paper's full mechanism (one LM per lang, each shard "
     "bucketed by perplexity under its OWN target): per language, "
     "documents rank by mean per-event e4 log-prob under their own "
@@ -2907,102 +2758,7 @@ def ngram_lm_perplexity_perlang_q(
     "at-scale threshold route, which keys by lang identically. The "
     "exact NTILE sort here is per-lang over NARROW (lang, mean, id) "
     "rows — the oracle-checked reference semantics.",
-)
-def ccnet_ppl_buckets_perlang_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.ngram_lm import ngram_lm_scores
-
-    docs = _docs(spark, sf_dir)
-    pair_model, ctx_model = _lm_perlang_models(docs)
-    scores = ngram_lm_scores(docs, pair_model, ctx_model, key_cols=("lang",))
-    means = scores.join(docs.select("doc_id", "lang"), "doc_id").select(
-        "doc_id",
-        "lang",
-        F.coalesce(
-            quantized(
-                F.col("logprob_sum_e4").cast("double") / F.col("n_bigrams"),
-                0,
-            ),
-            F.lit(0),
-        ).alias("mean_lp_e4"),
-    )
-    tiled = means.withColumn(
-        "bucket",
-        F.ntile(3).over(
-            Window.partitionBy("lang").orderBy(
-                F.desc("mean_lp_e4"), F.asc("doc_id")
-            )
-        ),
-    )
-    return (
-        tiled.groupBy("lang", "bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.max("mean_lp_e4").cast("bigint").alias("best_mean_lp_e4"),
-            F.min("mean_lp_e4").cast("bigint").alias("worst_mean_lp_e4"),
-        )
-        .select(
-            "lang",
-            F.col("bucket").cast("int").alias("bucket"),
-            "n_docs",
-            "best_mean_lp_e4",
-            "worst_mean_lp_e4",
-        )
-        .orderBy("lang", "bucket")
-    )
-
-
-@register(
-    "ccnet_funnel_perlang",
-    f"""
-    WITH {_CC_LINE_CTE},
-    heavy AS (
-        SELECT seg FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM lseg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    {_LM_PERLANG_CTES.strip()},
-    kevL AS (
-        SELECT k.doc_id, d.lang,
-               (('0x' || substr(md5(w1), 1, 4))::INT % {_LM_B1}) AS b1,
-               (('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::INT % {_LM_B12}) AS b12
-        FROM (
-            SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-            FROM (
-                SELECT doc_id,
-                       regexp_split_to_array(trim(coalesce(seg, '')), '\\s+') AS t
-                FROM kept
-            ), LATERAL (SELECT unnest(range(1, len(t))) AS i)
-        ) k JOIN documents d USING (doc_id)
-    ),
-    lmL AS (
-        SELECT e.doc_id, COUNT(*) AS n_bigrams,
-               SUM(COALESCE(m.lp_e4, c.floor_e4, {_lm_floor(_LM_B12)})) AS lp
-        FROM kevL e
-        LEFT JOIN modelL m
-          ON m.lang = e.lang AND m.b1 = e.b1 AND m.b12 = e.b12
-        LEFT JOIN ctxdL c ON c.lang = e.lang AND c.b1 = e.b1
-        GROUP BY e.doc_id
-    ),
-    tot AS (SELECT doc_id, COUNT(*) AS n_lines FROM lseg GROUP BY doc_id),
-    keptn AS (SELECT doc_id, COUNT(*) AS n_kept FROM kept GROUP BY doc_id)
-    SELECT d.lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(t.n_lines) AS BIGINT) AS n_lines,
-           CAST(SUM(t.n_lines - COALESCE(k.n_kept, 0)) AS BIGINT) AS n_lines_removed,
-           CAST(SUM(COALESCE(l.n_bigrams, 0)) AS BIGINT) AS n_bigrams,
-           CAST(SUM(COALESCE(l.lp, 0)) AS BIGINT) AS logprob_sum_e4
-    FROM documents d
-    JOIN tot t USING (doc_id)
-    LEFT JOIN keptn k USING (doc_id)
-    LEFT JOIN lmL l USING (doc_id)
-    GROUP BY d.lang ORDER BY d.lang
-    """,
-    doc="The CCNet composition under the PER-LANGUAGE models — the "
+    funnel_doc="The CCNet composition under the PER-LANGUAGE models — the "
     "paper's full pipeline (line dedup, then each language shard "
     "scored by the LM fit on ITS OWN target): heavy lines (min_df=3) "
     "drop whole, kept lines' adjacent pairs score under the doc's own "
@@ -3016,71 +2772,6 @@ def ccnet_ppl_buckets_perlang_q(
     "vanishes); the per-lang models stay bounded broadcasts; two "
     "narrow groupBys (doc, then lang).",
 )
-def ccnet_funnel_perlang_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import (
-        _with_hashes,
-        doc_segments,
-        heavy_segment_hashes,
-    )
-    from ..operators.cache import bounded_persist
-    from ..operators.ngram_lm import bigram_events, global_floor_e4
-
-    docs = _docs(spark, sf_dir)
-    segs = bounded_persist(
-        _with_hashes(doc_segments(_cc_lined_docs(docs), unit="line"))
-    )
-    heavy = heavy_segment_hashes(segs, min_df=3)
-    kept = segs.join(heavy, ["__h", "__h2"], "left_anti")
-
-    pair_model, ctx_model = _lm_perlang_models(docs)
-    floor = F.lit(global_floor_e4(_LM_B12)).cast("bigint")
-    kept_lang = kept.select("doc_id", "seg").join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    per_doc_lm = (
-        bigram_events(
-            kept_lang, text_col="seg", extra_cols=["lang"]
-        )
-        .join(
-            F.broadcast(pair_model.select("lang", "b1", "b12", "lp_e4")),
-            ["lang", "b1", "b12"],
-            "left",
-        )
-        .join(
-            F.broadcast(ctx_model.select("lang", "b1", "floor_e4")),
-            ["lang", "b1"],
-            "left",
-        )
-        .select("doc_id", F.coalesce("lp_e4", "floor_e4", floor).alias("__lp"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum("__lp").alias("lp"),
-        )
-    )
-    totals = segs.groupBy("doc_id").agg(F.count("*").alias("n_lines"))
-    keptn = kept.groupBy("doc_id").agg(F.count("*").alias("n_kept"))
-    return (
-        docs.select("doc_id", "lang")
-        .join(totals, "doc_id")
-        .join(keptn, "doc_id", "left")
-        .join(per_doc_lm, "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_lines").cast("bigint").alias("n_lines"),
-            F.sum(
-                F.col("n_lines") - F.coalesce("n_kept", F.lit(0))
-            ).cast("bigint").alias("n_lines_removed"),
-            F.sum(F.coalesce("n_bigrams", F.lit(0)))
-            .cast("bigint")
-            .alias("n_bigrams"),
-            F.sum(F.coalesce("lp", F.lit(0)))
-            .cast("bigint")
-            .alias("logprob_sum_e4"),
-        )
-        .orderBy("lang")
-    )
 
 
 @register(
@@ -3111,31 +2802,12 @@ def ccnet_funnel_perlang_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "turns a verdict false and hash-fails.",
 )
 def ccnet_ppl_buckets_approx_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ngram_lm import (
-        bigram_events,
-        ngram_lm_fit,
-        ngram_lm_scores,
-    )
-
-    docs = _docs(spark, sf_dir)
-    pair_model, ctx_model = ngram_lm_fit(
-        bigram_events(docs.filter(F.col("lang") == "en")).select("b1", "b12")
-    )
-    scores = ngram_lm_scores(docs, pair_model, ctx_model)
-    means = scores.join(docs.select("doc_id", "lang"), "doc_id").select(
-        "lang",
-        F.coalesce(
-            quantized(
-                F.col("logprob_sum_e4").cast("double") / F.col("n_bigrams"),
-                0,
-            ),
-            F.lit(0),
-        ).alias("mean_lp_e4"),
-    )
+    means = _lm_means(_docs(spark, sf_dir), ())
     # per-lang tercile cuts in ONE sketch pass; the result is an
     # n_lang-row table — an honest broadcast. Ascending quantiles at
     # 2/3 and 1/3 are the DESC-rank boundaries head|middle and
     # middle|tail.
+
     thr = means.groupBy("lang").agg(
         F.percentile_approx(
             "mean_lp_e4", [2.0 / 3.0, 1.0 / 3.0], 10000

@@ -1236,141 +1236,6 @@ _SEG_CTE = r"""
 """
 
 
-@register(
-    "boilerplate_segments",
-    f"""
-    WITH {_SEG_CTE}
-    SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM seg GROUP BY seg HAVING COUNT(*) >= 3
-    ORDER BY n_occurrences DESC, seg
-    """,
-    doc="Corpus-frequency boilerplate REPORT (CCNet-style line dedup, "
-    "detection half): documents split into non-overlapping 6-token "
-    "segments (the line surrogate on the single-line fixture — the "
-    "segmenter is one split('\\n') swap on real multi-line corpora), "
-    "total-occurrence counts over the whole corpus, every segment at "
-    "or above min_df=3 reported with its occurrence and distinct-doc "
-    "counts. Plan: per-row transform segmentation (no shuffle), one "
-    "groupBy keyed on xxhash64(seg) — collision-proofed by grouping "
-    "(hash, text) — with map-side partial agg; output bounded by "
-    "total_segments/min_df. 28 segments / 105 occurrences at sf0.01.",
-)
-def boilerplate_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import doc_segments, segment_frequency_table
-
-    segs = doc_segments(_docs(spark, sf_dir), seg_tokens=6)
-    return segment_frequency_table(segs, min_df=3).orderBy(
-        F.desc("n_occurrences"), "seg"
-    )
-
-
-@register(
-    "boilerplate_removal",
-    f"""
-    WITH {_SEG_CTE},
-    heavy AS (
-        SELECT seg FROM seg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM seg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               md5(string_agg(seg, ' ' ORDER BY seg_id)) AS cleaned_md5
-        FROM kept GROUP BY doc_id
-    ),
-    tot AS (
-        SELECT doc_id, COUNT(*) AS n_segments FROM seg GROUP BY doc_id
-    )
-    SELECT t.doc_id, CAST(t.n_segments AS BIGINT) AS n_segments,
-           CAST(t.n_segments - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.cleaned_md5, md5('')) AS cleaned_md5
-    FROM tot t LEFT JOIN agg a USING (doc_id)
-    ORDER BY t.doc_id
-    """,
-    doc="Corpus-frequency boilerplate REMOVAL (CCNet-style line dedup, "
-    "the applied transformation): every 6-token segment whose corpus "
-    "occurrence count reaches min_df=3 is dropped WHOLE — the "
-    "line-level decision web pipelines apply to nav bars and cookie "
-    "banners, distinct from the span-level Lee-et-al. removal "
-    "(exact_substring_removal: any df>1 window, partial-token cover). "
-    "The oracle certifies the RESULT: per-doc segment/removed counts "
-    "plus an md5 of the cleaned order-preserved text. Plan: the heavy "
-    "set is bounded by total_segments/min_df, so the decision join is "
-    "an unhinted left_anti AQE sides at runtime (never a corpus-sized "
-    "broadcast hint); reassembly is one per-doc sort-by-position fold. "
-    "68 docs touched at sf0.01 — detection and removal non-vacuous.",
-)
-def boilerplate_removal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import remove_boilerplate_segments
-
-    return remove_boilerplate_segments(
-        _docs(spark, sf_dir), seg_tokens=6, min_df=3
-    ).orderBy("doc_id")
-
-
-@register(
-    "incremental_boilerplate",
-    f"""
-    WITH {_SEG_CTE},
-    heavy AS (
-        SELECT seg FROM seg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    newseg AS (
-        SELECT * FROM seg WHERE doc_id % 10 >= 8
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM newseg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               md5(string_agg(seg, ' ' ORDER BY seg_id)) AS cleaned_md5
-        FROM kept GROUP BY doc_id
-    ),
-    tot AS (
-        SELECT doc_id, COUNT(*) AS n_segments FROM newseg GROUP BY doc_id
-    )
-    SELECT t.doc_id, CAST(t.n_segments AS BIGINT) AS n_segments,
-           CAST(t.n_segments - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.cleaned_md5, md5('')) AS cleaned_md5
-    FROM tot t LEFT JOIN agg a USING (doc_id)
-    ORDER BY t.doc_id
-    """,
-    doc="Incremental boilerplate removal — the daily-batch flow of the "
-    "line-dedup stage: the standing corpus (doc_id%10<8) is touched "
-    "only through its PERSISTED hash-keyed segment-frequency state "
-    "(operators/boilerplate.segment_frequency_state), the ingest batch "
-    "(doc_id%10>=8) folds its own delta in (additive integer counts — "
-    "folded == one-shot exactly, the incremental-tier invariant), and "
-    "removal decisions are emitted for the NEW docs only. The oracle "
-    "is the ONE-SHOT recount over the union restricted to batch docs, "
-    "so the green row certifies fold==recount end-to-end. Corpus cost "
-    "per batch is state-sized (distinct segments), never a re-scan — "
-    "what makes continuous line-dedup affordable on a 100 TB corpus.",
-)
-def incremental_boilerplate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import (
-        remove_boilerplate_incremental,
-        segment_frequency_state,
-    )
-
-    docs = _docs(spark, sf_dir)
-    corpus_state = segment_frequency_state(
-        docs.filter(F.col("doc_id") % 10 < 8), seg_tokens=6
-    )
-    return remove_boilerplate_incremental(
-        docs.filter(F.col("doc_id") % 10 >= 8),
-        corpus_state,
-        seg_tokens=6,
-        min_df=3,
-    ).orderBy("doc_id")
-
-
 # --- line-mode boilerplate (the CCNet production unit) --------------
 #
 # The fixture documents are single-line, so the line unit needs a
@@ -1427,16 +1292,142 @@ def _lined_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "boilerplate_lines",
-    f"""
-    WITH {_LINE_CTE}
+def _boilerplate_oracle(unit: str, kind: str) -> str:
+    """DuckDB twin of one boilerplate query over ``unit``: the frequency
+    ``"report"``, the ``"removal"`` over every doc, or the
+    ``"incremental"`` removal — the one-shot recount restricted to the
+    batch docs (doc_id % 10 >= 8)."""
+    cte, seg, sep = {
+        "segment": (_SEG_CTE, "seg", "' '"),
+        "line": (_LINE_CTE, "lseg", "chr(10)"),
+    }[unit]
+    if kind == "report":
+        return f"""
+    WITH {cte}
     SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
+    FROM {seg} GROUP BY seg HAVING COUNT(*) >= 3
     ORDER BY n_occurrences DESC, seg
-    """,
-    doc="LINE-mode boilerplate REPORT — the production unit of "
+    """
+    scope = "doc_id % 10 >= 8" if kind == "incremental" else "TRUE"
+    return f"""
+    WITH {cte},
+    heavy AS (
+        SELECT seg FROM {seg} GROUP BY seg HAVING COUNT(*) >= 3
+    ),
+    scoped AS (
+        SELECT * FROM {seg} WHERE {scope}
+    ),
+    kept AS (
+        SELECT s.doc_id, s.seg_id, s.seg
+        FROM scoped s LEFT JOIN heavy h ON s.seg = h.seg
+        WHERE h.seg IS NULL
+    ),
+    agg AS (
+        SELECT doc_id, COUNT(*) AS n_kept,
+               md5(string_agg(seg, {sep} ORDER BY seg_id)) AS cleaned_md5
+        FROM kept GROUP BY doc_id
+    ),
+    tot AS (
+        SELECT doc_id, COUNT(*) AS n_segments FROM scoped GROUP BY doc_id
+    )
+    SELECT t.doc_id, CAST(t.n_segments AS BIGINT) AS n_segments,
+           CAST(t.n_segments - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
+           COALESCE(a.cleaned_md5, md5('')) AS cleaned_md5
+    FROM tot t LEFT JOIN agg a USING (doc_id)
+    ORDER BY t.doc_id
+    """
+
+
+def _boilerplate_family(
+    unit: str, report_doc: str, removal_doc: str, incremental_doc: str
+) -> None:
+    """Register the boilerplate report, removal and incremental-removal
+    queries for one removal unit (min_df=3): 6-token ``"segment"``s of
+    the fixture text, or ``"line"``s of the derived multi-line corpus
+    (``_lined_docs``)."""
+    from ..operators import boilerplate as bp
+
+    lines = unit == "line"
+    sfx = "_lines" if lines else ""
+    report_name = "boilerplate_lines" if lines else "boilerplate_segments"
+
+    def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = _docs(spark, sf_dir)
+        return _lined_docs(docs) if lines else docs
+
+    def report(spark: SparkSession, sf_dir: str) -> DataFrame:
+        segs = bp.doc_segments(corpus(spark, sf_dir), seg_tokens=6, unit=unit)
+        return bp.segment_frequency_table(segs, min_df=3).orderBy(
+            F.desc("n_occurrences"), "seg"
+        )
+
+    def removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return bp.remove_boilerplate_segments(
+            corpus(spark, sf_dir), seg_tokens=6, unit=unit, min_df=3
+        ).orderBy("doc_id")
+
+    def incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = corpus(spark, sf_dir)
+        corpus_state = bp.segment_frequency_state(
+            docs.filter(F.col("doc_id") % 10 < 8), seg_tokens=6, unit=unit
+        )
+        return bp.remove_boilerplate_incremental(
+            docs.filter(F.col("doc_id") % 10 >= 8),
+            corpus_state,
+            seg_tokens=6,
+            unit=unit,
+            min_df=3,
+        ).orderBy("doc_id")
+
+    for name, kind, fn, doc in (
+        (report_name, "report", report, report_doc),
+        (f"boilerplate_removal{sfx}", "removal", removal, removal_doc),
+        (f"incremental_boilerplate{sfx}", "incremental", incremental, incremental_doc),
+    ):
+        register(name, _boilerplate_oracle(unit, kind), doc=doc)(fn)
+
+
+_boilerplate_family(
+    "segment",
+    report_doc="Corpus-frequency boilerplate REPORT (CCNet-style line dedup, "
+    "detection half): documents split into non-overlapping 6-token "
+    "segments (the line surrogate on the single-line fixture — the "
+    "segmenter is one split('\\n') swap on real multi-line corpora), "
+    "total-occurrence counts over the whole corpus, every segment at "
+    "or above min_df=3 reported with its occurrence and distinct-doc "
+    "counts. Plan: per-row transform segmentation (no shuffle), one "
+    "groupBy keyed on xxhash64(seg) — collision-proofed by grouping "
+    "(hash, text) — with map-side partial agg; output bounded by "
+    "total_segments/min_df. 28 segments / 105 occurrences at sf0.01.",
+    removal_doc="Corpus-frequency boilerplate REMOVAL (CCNet-style line dedup, "
+    "the applied transformation): every 6-token segment whose corpus "
+    "occurrence count reaches min_df=3 is dropped WHOLE — the "
+    "line-level decision web pipelines apply to nav bars and cookie "
+    "banners, distinct from the span-level Lee-et-al. removal "
+    "(exact_substring_removal: any df>1 window, partial-token cover). "
+    "The oracle certifies the RESULT: per-doc segment/removed counts "
+    "plus an md5 of the cleaned order-preserved text. Plan: the heavy "
+    "set is bounded by total_segments/min_df, so the decision join is "
+    "an unhinted left_anti AQE sides at runtime (never a corpus-sized "
+    "broadcast hint); reassembly is one per-doc sort-by-position fold. "
+    "68 docs touched at sf0.01 — detection and removal non-vacuous.",
+    incremental_doc="Incremental boilerplate removal — the daily-batch flow of the "
+    "line-dedup stage: the standing corpus (doc_id%10<8) is touched "
+    "only through its PERSISTED hash-keyed segment-frequency state "
+    "(operators/boilerplate.segment_frequency_state), the ingest batch "
+    "(doc_id%10>=8) folds its own delta in (additive integer counts — "
+    "folded == one-shot exactly, the incremental-tier invariant), and "
+    "removal decisions are emitted for the NEW docs only. The oracle "
+    "is the ONE-SHOT recount over the union restricted to batch docs, "
+    "so the green row certifies fold==recount end-to-end. Corpus cost "
+    "per batch is state-sized (distinct segments), never a re-scan — "
+    "what makes continuous line-dedup affordable on a 100 TB corpus.",
+)
+
+_boilerplate_family(
+    "line",
+    report_doc="LINE-mode boilerplate REPORT — the production unit of "
     "CCNet/RefinedWeb line dedup (unit='line' in "
     "operators/boilerplate.doc_segments: split('\\n'), whole-line "
     "decisions), run on a derived multi-line corpus (cookie banner on "
@@ -1446,43 +1437,7 @@ def _lined_docs(docs: DataFrame) -> DataFrame:
     "shuffle), frequency groupBy keyed (hash, text) for the audit "
     "table; heavy set bounded by total_lines/min_df. 7 heavy lines at "
     "sf0.01 (banner 250, newsletter |en|, five footers ~100 each).",
-)
-def boilerplate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import doc_segments, segment_frequency_table
-
-    segs = doc_segments(_lined_docs(_docs(spark, sf_dir)), unit="line")
-    return segment_frequency_table(segs, min_df=3).orderBy(
-        F.desc("n_occurrences"), "seg"
-    )
-
-
-@register(
-    "boilerplate_removal_lines",
-    f"""
-    WITH {_LINE_CTE},
-    heavy AS (
-        SELECT seg FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM lseg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               md5(string_agg(seg, chr(10) ORDER BY seg_id)) AS cleaned_md5
-        FROM kept GROUP BY doc_id
-    ),
-    tot AS (
-        SELECT doc_id, COUNT(*) AS n_segments FROM lseg GROUP BY doc_id
-    )
-    SELECT t.doc_id, CAST(t.n_segments AS BIGINT) AS n_segments,
-           CAST(t.n_segments - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.cleaned_md5, md5('')) AS cleaned_md5
-    FROM tot t LEFT JOIN agg a USING (doc_id)
-    ORDER BY t.doc_id
-    """,
-    doc="LINE-mode boilerplate REMOVAL — the stage CCNet actually "
+    removal_doc="LINE-mode boilerplate REMOVAL — the stage CCNet actually "
     "ships: every line whose corpus frequency reaches min_df=3 drops "
     "WHOLE, kept lines re-join with '\\n', and the oracle certifies "
     "the cleaned text digest per document. On the derived corpus "
@@ -1494,45 +1449,7 @@ def boilerplate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single 64-bit key expects ~10^6 collisions, each silently "
     "deleting an innocent line; the pair drives that to ~never while "
     "the shuffle still carries 16 bytes + count, not line text.",
-)
-def boilerplate_removal_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.boilerplate import remove_boilerplate_segments
-
-    return remove_boilerplate_segments(
-        _lined_docs(_docs(spark, sf_dir)), unit="line", min_df=3
-    ).orderBy("doc_id")
-
-
-@register(
-    "incremental_boilerplate_lines",
-    f"""
-    WITH {_LINE_CTE},
-    heavy AS (
-        SELECT seg FROM lseg GROUP BY seg HAVING COUNT(*) >= 3
-    ),
-    newseg AS (
-        SELECT * FROM lseg WHERE doc_id % 10 >= 8
-    ),
-    kept AS (
-        SELECT s.doc_id, s.seg_id, s.seg
-        FROM newseg s LEFT JOIN heavy h ON s.seg = h.seg
-        WHERE h.seg IS NULL
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_kept,
-               md5(string_agg(seg, chr(10) ORDER BY seg_id)) AS cleaned_md5
-        FROM kept GROUP BY doc_id
-    ),
-    tot AS (
-        SELECT doc_id, COUNT(*) AS n_segments FROM newseg GROUP BY doc_id
-    )
-    SELECT t.doc_id, CAST(t.n_segments AS BIGINT) AS n_segments,
-           CAST(t.n_segments - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.cleaned_md5, md5('')) AS cleaned_md5
-    FROM tot t LEFT JOIN agg a USING (doc_id)
-    ORDER BY t.doc_id
-    """,
-    doc="Incremental LINE-mode boilerplate removal — the daily-batch "
+    incremental_doc="Incremental LINE-mode boilerplate removal — the daily-batch "
     "flow of the production unit: the standing corpus (doc_id%10<8) "
     "is touched only through its persisted 128-bit-hash-keyed LINE "
     "frequency state, the ingest batch folds its own delta in, and "
@@ -1542,24 +1459,6 @@ def boilerplate_removal_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "actually dedups, closing the loop the segment-mode "
     "incremental_boilerplate opened.",
 )
-def incremental_boilerplate_lines_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.boilerplate import (
-        remove_boilerplate_incremental,
-        segment_frequency_state,
-    )
-
-    docs = _lined_docs(_docs(spark, sf_dir))
-    corpus_state = segment_frequency_state(
-        docs.filter(F.col("doc_id") % 10 < 8), unit="line"
-    )
-    return remove_boilerplate_incremental(
-        docs.filter(F.col("doc_id") % 10 >= 8),
-        corpus_state,
-        unit="line",
-        min_df=3,
-    ).orderBy("doc_id")
 
 
 # --- corpus frequency diagnostics (Zipf fit, frequency spectrum) ----

@@ -19,12 +19,20 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions.quantize import e4_sql, quantized_sql
-from ..operators.similarity import ivf_topk, topk_pandas
+from ..operators.similarity import (
+    embedding_near_dup_multiprobe,
+    embedding_near_dup_pairs,
+    embedding_near_dup_probed,
+    ivf_topk,
+    topk_pandas,
+)
 from .base import REGISTRY, register
 from .lsh_oracle import (
     cap_cte,
     capped_sig_cte,
     capped_sig_cte_dyn,
+    hamming_cand_cte,
+    lsh_sig_cte,
     lsh_sig_cte_dyn,
     planes_cte,
     probed_cand_cte_dyn,
@@ -127,65 +135,42 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, queries, pivots, k=5).orderBy("query_id", "rank")
 
 
-@register(
-    "embedding_near_dup",
-    f"""
-    WITH {_LONG_CTE},
-    sig AS (
-        SELECT vec_id,
-               string_agg(CASE WHEN dotj > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS signature
-        FROM (
-            SELECT vec_id, j, SUM(val * (((j*31 + (pos-1)*7) % 11) - 5)) AS dotj
-            FROM long, UNNEST(range(8)) AS t(j)
-            GROUP BY vec_id, j
-        ) GROUP BY vec_id
-    ),
+#: exact-signature candidates (Hamming=0): pairs sharing the full
+#: 8-bit signature
+_EXACT_SIG_CAND = """
     cand AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM sig a JOIN sig b ON a.signature = b.signature AND a.vec_id < b.vec_id
-    ),
-    dots AS (
-        SELECT id_a, id_b, {e4_sql('SUM(qa.val * qb.val)')} AS cosine_e4
-        FROM cand
-        JOIN long qa ON qa.vec_id = id_a
-        JOIN long qb ON qb.vec_id = id_b AND qb.pos = qa.pos
-        GROUP BY id_a, id_b
-    )
-    SELECT id_a, id_b, cosine_e4 FROM dots
-    WHERE cosine_e4 >= 3500
-    ORDER BY id_a, id_b
-    """,
-    doc="TWIN — at scale use embedding_near_dup_probed (this fixed-"
-    "width kernel probes 8.53x wall at 10x data, PROBE_r9; retained as "
-    "the exact-signature differential). Embedding-cosine near-duplicate "
-    "pairs, Hamming=0 candidates only: random-hyperplane LSH signatures "
-    "(integer hyperplanes, JVM-side array folds) bucket the corpus; "
-    "exact cosine verifies only same-bucket candidates — never the full "
-    "N^2. Since r7 this is the differential twin of the recall-complete "
-    "family: compositions (dedup_consensus, embedding_dup_clusters) "
-    "default to the Hamming<=1 PROBED kernel (embedding_near_dup_probed).",
-)
-def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_pairs
-
-    from ..operators.cache import presented
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # presented(): the pair emitter's final distance filter is heavy and
-    # shuffle-free past its persisted candidate join — a bare orderBy
-    # re-runs it via range-partition sampling
-    return presented(
-        embedding_near_dup_pairs(emb, threshold=0.35), "id_a", "id_b"
-    )
+    )"""
 
 
-def _multiprobe_oracle(n_planes: int = 8, max_hamming: int = 1) -> str:
-    from .lsh_oracle import hamming_cand_cte, lsh_sig_cte
-
+def _near_dup_oracle(
+    kernel, n_planes: int | None = 8, max_hamming: int = 1, max_bucket=None
+) -> str:
+    """DuckDB twin of ``kernel(emb, threshold=0.35, ...)``: the kernel's
+    candidate pairs from the shared plans/lsh_oracle fragments, then the
+    exact cosine verify every near-dup twin shares."""
+    if kernel is embedding_near_dup_pairs:
+        cand = [lsh_sig_cte(n_planes), _EXACT_SIG_CAND]
+    elif kernel is embedding_near_dup_multiprobe:
+        cand = [lsh_sig_cte(n_planes), hamming_cand_cte(n_planes, max_hamming)]
+    else:
+        # query-side Hamming<=1 probing at the width-adaptive n_planes;
+        # a bucket cap drops over-cap signatures from both join sides
+        if max_bucket is None:
+            cap = []
+        elif max_bucket == "auto":
+            cap = [cap_cte(), capped_sig_cte_dyn()]
+        else:
+            cap = [capped_sig_cte(max_bucket)]
+        cand = [
+            planes_cte(),
+            lsh_sig_cte_dyn(),
+            *cap,
+            probed_cand_cte_dyn(src="sigc" if cap else "sig"),
+        ]
     return f"""
-    WITH {_LONG_CTE},
-    {lsh_sig_cte(n_planes)},
-    {hamming_cand_cte(n_planes, max_hamming)},
+    WITH {_LONG_CTE},{",".join(cand)},
     dots AS (
         SELECT id_a, id_b, {e4_sql('SUM(qa.val * qb.val)')} AS cosine_e4
         FROM cand
@@ -199,9 +184,43 @@ def _multiprobe_oracle(n_planes: int = 8, max_hamming: int = 1) -> str:
     """
 
 
-@register(
+def _near_dup_twin(
+    name: str, doc: str, kernel=embedding_near_dup_probed, **params
+) -> None:
+    """Register one embedding near-dup twin: ``kernel`` (operators/
+    similarity) at cosine >= 0.35 with ``params``, ordered by pair."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..operators.cache import presented
+
+        emb = load_table(spark, sf_dir, "embeddings")
+        pairs = kernel(emb, threshold=0.35, **params)
+        if kernel is embedding_near_dup_pairs:
+            # presented(): the pair emitter's final distance filter is
+            # heavy and shuffle-free past its persisted candidate join — a
+            # bare orderBy re-runs it via range-partition sampling
+            return presented(pairs, "id_a", "id_b")
+        return pairs.orderBy("id_a", "id_b")
+
+    register(name, _near_dup_oracle(kernel, **params), doc=doc)(build)
+
+
+_near_dup_twin(
+    "embedding_near_dup",
+    doc="TWIN — at scale use embedding_near_dup_probed (this fixed-"
+    "width kernel probes 8.53x wall at 10x data, PROBE_r9; retained as "
+    "the exact-signature differential). Embedding-cosine near-duplicate "
+    "pairs, Hamming=0 candidates only: random-hyperplane LSH signatures "
+    "(integer hyperplanes, JVM-side array folds) bucket the corpus; "
+    "exact cosine verifies only same-bucket candidates — never the full "
+    "N^2. Since r7 this is the differential twin of the recall-complete "
+    "family: compositions (dedup_consensus, embedding_dup_clusters) "
+    "default to the Hamming<=1 PROBED kernel (embedding_near_dup_probed).",
+    kernel=embedding_near_dup_pairs,
+)
+
+_near_dup_twin(
     "embedding_near_dup_multiprobe",
-    _multiprobe_oracle(8, 1),
     doc="TWIN — at scale use embedding_near_dup_probed (this fixed-"
     "width block-join variant probes 10.71x wall at 10x data, PROBE_r9; "
     "retained as the pigeonhole-join differential). Hamming-tolerant "
@@ -209,36 +228,13 @@ def _multiprobe_oracle(n_planes: int = 8, max_hamming: int = 1) -> str:
     "via pigeonhole block joins (a single splitting hyperplane no "
     "longer hides a true near-dup), exact cosine verifies. Superset of "
     "embedding_near_dup's exact-signature candidates.",
+    kernel=embedding_near_dup_multiprobe,
+    n_planes=8,
+    max_hamming=1,
 )
-def embedding_near_dup_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_multiprobe
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_multiprobe(
-        emb, threshold=0.35, n_planes=8, max_hamming=1
-    ).orderBy("id_a", "id_b")
-
-
-@register(
+_near_dup_twin(
     "embedding_near_dup_probed",
-    f"""
-    WITH {_LONG_CTE},
-    {planes_cte()},
-    {cap_cte()},
-    {lsh_sig_cte_dyn()},
-    {capped_sig_cte_dyn()},
-    {probed_cand_cte_dyn(src='sigc')},
-    dots AS (
-        SELECT id_a, id_b, {e4_sql('SUM(qa.val * qb.val)')} AS cosine_e4
-        FROM cand
-        JOIN long qa ON qa.vec_id = id_a
-        JOIN long qb ON qb.vec_id = id_b AND qb.pos = qa.pos
-        GROUP BY id_a, id_b
-    )
-    SELECT id_a, id_b, cosine_e4 FROM dots
-    WHERE cosine_e4 >= 3500
-    ORDER BY id_a, id_b
-    """,
     doc="Hamming<=1 embedding near-dup via QUERY-SIDE signature probing "
     "(operators/similarity.embedding_near_dup_probed) at the FULL "
     "production configuration: WIDTH-ADAPTIVE sizing (r7 — "
@@ -258,34 +254,13 @@ def embedding_near_dup_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFra
     "mass-dup cores BY DESIGN — the recall-exact differential twin is "
     "embedding_near_dup_probed_uncapped, and exact_then_near_dup pins "
     "the recommended exact-dedup-first composition.",
+    n_planes=None,
+    max_hamming=1,
+    max_bucket="auto",
 )
-def embedding_near_dup_probed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_probed
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_probed(
-        emb, threshold=0.35, n_planes=None, max_hamming=1, max_bucket="auto"
-    ).orderBy("id_a", "id_b")
-
-
-@register(
+_near_dup_twin(
     "embedding_near_dup_probed_uncapped",
-    f"""
-    WITH {_LONG_CTE},
-    {planes_cte()},
-    {lsh_sig_cte_dyn()},
-    {probed_cand_cte_dyn()},
-    dots AS (
-        SELECT id_a, id_b, {e4_sql('SUM(qa.val * qb.val)')} AS cosine_e4
-        FROM cand
-        JOIN long qa ON qa.vec_id = id_a
-        JOIN long qb ON qb.vec_id = id_b AND qb.pos = qa.pos
-        GROUP BY id_a, id_b
-    )
-    SELECT id_a, id_b, cosine_e4 FROM dots
-    WHERE cosine_e4 >= 3500
-    ORDER BY id_a, id_b
-    """,
     doc="TWIN — at scale use embedding_near_dup_probed (this uncapped "
     "variant's candidates grow 870x at 30x on clustered data; retained "
     "as the recall-exact reference). The RECALL-EXACT differential twin "
@@ -300,16 +275,11 @@ def embedding_near_dup_probed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "need an exact reference (capped result = this result minus pairs "
     "whose ids share an over-cap bucket — pinned by pytest), and the "
     "probe's contrast row.",
+    n_planes=None,
+    max_hamming=1,
+    max_bucket=None,
 )
-def embedding_near_dup_probed_uncapped_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_probed
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_probed(
-        emb, threshold=0.35, n_planes=None, max_hamming=1, max_bucket=None
-    ).orderBy("id_a", "id_b")
 
 
 @register(
@@ -391,25 +361,8 @@ def incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-@register(
+_near_dup_twin(
     "embedding_near_dup_probed_capped",
-    f"""
-    WITH {_LONG_CTE},
-    {planes_cte()},
-    {lsh_sig_cte_dyn()},
-    {capped_sig_cte(16)},
-    {probed_cand_cte_dyn(src='sigc')},
-    dots AS (
-        SELECT id_a, id_b, {e4_sql('SUM(qa.val * qb.val)')} AS cosine_e4
-        FROM cand
-        JOIN long qa ON qa.vec_id = id_a
-        JOIN long qb ON qb.vec_id = id_b AND qb.pos = qa.pos
-        GROUP BY id_a, id_b
-    )
-    SELECT id_a, id_b, cosine_e4 FROM dots
-    WHERE cosine_e4 >= 3500
-    ORDER BY id_a, id_b
-    """,
     doc="TWIN — at scale use embedding_near_dup_probed (same kernel; "
     "this row pins the fixed-constant cap against the dynamic rule). "
     "The probed near-dup kernel with a FIXED bucket cap "
@@ -427,16 +380,11 @@ def incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "HAVING path against the dynamic cap_cte computation, so a drift "
     "in auto_max_bucket or cap_cte on either engine side turns "
     "exactly one of the two rows red.",
+    n_planes=None,
+    max_hamming=1,
+    max_bucket=16,
 )
-def embedding_near_dup_probed_capped_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_probed
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_probed(
-        emb, threshold=0.35, n_planes=None, max_hamming=1, max_bucket=16
-    ).orderBy("id_a", "id_b")
 
 
 @register(

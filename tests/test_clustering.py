@@ -501,3 +501,20 @@ def test_semdedup_assign_scale_route_survives_structured_ids(spark):
     rows = out.select("id").collect()
     assert len(rows) == n
     assert len({r.id for r in rows}) == n
+
+
+def test_semdedup_assign_routing_probe_error_messages(spark):
+    """ADVICE: the routing probe took ``F.first`` without ignorenulls, so
+    a non-empty frame whose first vector is NULL reported "empty
+    DataFrame". An empty frame and an all-NULL vector column now each
+    get their own message."""
+    from data_integration_pipelines_spark.operators.clustering import (
+        semdedup_assign,
+    )
+
+    schema = "vec_id bigint, embedding array<float>"
+    with pytest.raises(ValueError, match="empty DataFrame"):
+        semdedup_assign(spark.createDataFrame([], schema), k=2)
+    all_null = spark.createDataFrame([(1, None), (2, None)], schema)
+    with pytest.raises(ValueError, match="every 'embedding' value is NULL"):
+        semdedup_assign(all_null, k=2)

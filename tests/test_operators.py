@@ -814,6 +814,36 @@ def test_loop_session_isolates_aqe_from_base_session(spark):
         cached.unpersist()
 
 
+def test_loop_session_memo_dies_with_its_base_session(spark):
+    """A dropped session's loop clone is not kept by the memo, and a new
+    session on the same context gets a fresh clone carrying ITS confs —
+    never the stale clone of a GC'd session whose id() it may reuse."""
+    import gc
+    import weakref
+
+    from data_integration_pipelines_spark.operators.cache import loop_session
+
+    old = spark.newSession()
+    old.conf.set("spark.sql.session.timeZone", "America/New_York")
+    old_clone = loop_session(old, shuffle_partitions=3)
+    assert old_clone.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    old_ref = weakref.ref(old_clone)
+    del old, old_clone
+    # building a session also re-points pyspark's RDD.toDF patch, which
+    # holds the most recently built session, away from the old clone
+    new = spark.newSession()
+    gc.collect()
+    assert old_ref() is None, "memo kept a dropped session's clone alive"
+
+    clone = loop_session(new, shuffle_partitions=3)
+    assert clone.conf.get("spark.sql.session.timeZone") == new.conf.get(
+        "spark.sql.session.timeZone"
+    )
+    assert clone.conf.get("spark.sql.shuffle.partitions") == "3"
+    # the live session keeps its one memoized clone
+    assert loop_session(new, shuffle_partitions=3) is clone
+
+
 class TestQuartileBins:
     """Auto-switching equi-depth cuts (operators/quantiles, r7)."""
 
@@ -875,6 +905,45 @@ class TestQuartileBins:
         assert {r.v: r.bin for r in binned.collect()} == {
             r.v: r.bin for r in appr.collect()
         }
+
+    def test_interleaved_calls_keep_their_own_cuts(self, spark, monkeypatch):
+        """ADVICE: the at-scale route registered its cuts under the fixed
+        name ``{view}__qcuts``, so a second call on the same view landing
+        between the first call's registration and its analysis replaced
+        the first call's cuts. Here a call over ``w`` runs inside a call
+        over ``v`` at exactly that point; each must bin like a run
+        alone, and no cuts view may outlive its call."""
+        from data_integration_pipelines_spark.operators import quantiles
+
+        spark.range(2000).repartition(1).select(
+            (F.col("id") * 37 % 997).cast("double").alias("v"),
+            (F.col("id") * 11 % 101 + 5000).cast("double").alias("w"),
+        ).createOrReplaceTempView("qb_race")
+
+        def bins(df, col):
+            return {(r[col], r.bin) for r in df.select(col, "bin").collect()}
+
+        alone_v = bins(quantiles.with_quartile_bin(spark, "qb_race", "v", threshold=10), "v")
+        alone_w = bins(quantiles.with_quartile_bin(spark, "qb_race", "w", threshold=10), "w")
+
+        binned = quantiles._binned
+        inner = {}
+
+        def interleaved(spark_, view, vcol, q):
+            if not inner:
+                inner["started"] = True  # the nested call bins straight through
+                inner["w"] = quantiles.with_quartile_bin(
+                    spark, "qb_race", "w", threshold=10
+                )
+            return binned(spark_, view, vcol, q)
+
+        monkeypatch.setattr(quantiles, "_binned", interleaved)
+        outer_v = quantiles.with_quartile_bin(spark, "qb_race", "v", threshold=10)
+        assert bins(outer_v, "v") == alone_v
+        assert bins(inner["w"], "w") == alone_w
+        assert not [
+            t.name for t in spark.catalog.listTables() if "__qcuts" in t.name
+        ]
 
     def test_unknown_method_rejected(self, spark):
         import pytest as _pytest
