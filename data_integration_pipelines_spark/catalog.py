@@ -32,11 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast when joined
-# against a fact table (region: 5 rows, nation: 25 rows, supplier:
-# O(100) rows at sf1 scale-equivalents).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def rightsize_session(spark: SparkSession) -> None:
     """Engine-required runtime confs for externally-created sessions.

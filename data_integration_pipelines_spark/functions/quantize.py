@@ -37,8 +37,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-E4_SCALE = 10_000
-
 
 def quantized(col: Column | str, decimals: int = 4) -> Column:
     """Quantize a computed double to a scaled BIGINT (``x * 10^d``,

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import routing
 from .dedup import spread
 
 # End-of-word sentinel (Sennrich et al. convention): lets a merge
@@ -118,6 +119,8 @@ def word_frequency_table(
 #: above it (real corpora: ~10M distinct words at web scale), the
 #: vocab-sized distributed loop runs exactly as before. 2^18 cells is
 #: a few MB of driver tuples and <= ~0.3 s/merge of Counter work.
+#: Fetched with this as a ROW cap (a word costs >= 1 cell): over it at
+#: most MAX_DRIVER_VOCAB_CELLS + 1 (word, freq) rows move and are dropped.
 MAX_DRIVER_VOCAB_CELLS = 262_144
 
 
@@ -191,20 +194,15 @@ def bpe_train(
     """
     spark = docs.sparkSession
     wf = word_frequency_table(docs, text_col)
-    # Route on vocab size (the kmeans_fit auto-switch convention): the
-    # loop's working set is the DISTINCT-WORD table, so when its total
-    # char-token cells fit the driver guard, collecting it once and
+    # Route on vocab size (the kmeans_fit auto-switch convention): when
+    # the DISTINCT-WORD table's char-token cells fit the driver guard,
     # folding the merges in Python replaces ~3 scheduler round-trips
-    # per merge with zero — the corpus is still touched exactly once,
-    # by the word_frequency_table shuffle above (guide §1.2: fix the
-    # algorithm, not the config). Real corpora blow the guard and take
-    # the distributed loop below, unchanged.
+    # per merge with zero; the corpus is still read once, by the
+    # word_frequency_table shuffle above. Real corpora take the
+    # distributed loop below, unchanged.
     wf = wf.localCheckpoint(eager=False)
-    cells = wf.agg(
-        F.coalesce(F.sum(F.length("word") + 1), F.lit(0)).alias("cells")
-    ).collect()[0]["cells"]
-    if cells <= MAX_DRIVER_VOCAB_CELLS:
-        rows = [(r["word"], r["freq"]) for r in wf.collect()]
+    rows = routing.bounded_fetch(wf, MAX_DRIVER_VOCAB_CELLS)  # (word, freq)
+    if rows is not None and sum(len(w) + 1 for w, _ in rows) <= MAX_DRIVER_VOCAB_CELLS:
         return spark.createDataFrame(
             _driver_train(rows, n_merges, min_freq), MERGE_SCHEMA
         )

@@ -19,11 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Hop tables at or under this row count run the closure on the driver
-#: (collect once, Python BFS, one Arrow createDataFrame back) — the
-#: working set is the ontology itself, so per-hop Spark jobs are pure
-#: scheduler latency. Two longs per row: a few tens of MB at the cap.
-DRIVER_EDGE_ROWS = 250_000
+from . import routing
 
 #: Hop tables above the driver cap but at or under this row count are
 #: broadcast into the distributed loop's per-hop join; larger graphs
@@ -51,16 +47,20 @@ BROADCAST_HOP_ROWS = 1_000_000
 #: a degenerate closure far above ontology scale — region_agreement's
 #: 280k-row binary-heap fixture — measured ~1 s/run of planning cost
 #: against a ~0.1 s broadcast saving and keeps the checkpoint leaf.
+#: Routed by one :func:`routing.bounded_fetch` of the closure plan: over
+#: the cap it moves and drops at most FCA_LOCAL_ROWS + 1 rows, then
+#: checkpoints. The shared exchange needs Catalyst to keep the ``<=`` /
+#: ``>=`` ancestor pair of the second join a residual condition; a Spark
+#: upgrade that folds it into an equi-key brings the second exchange back
+#: (caught by ``test_fca_local_route_parity_and_single_broadcast_build``).
 FCA_LOCAL_ROWS = 65_536
 
 
-def _driver_closure(
-    edges: DataFrame, up: DataFrame, max_iterations: int
-) -> DataFrame:
-    """Driver-side semi-naive closure over a collected hop table —
-    bit-identical semantics to the distributed loop (multiset row
-    semantics of the iterated join, same depth numbering, same
-    non-convergence error)."""
+def _driver_closure(up: DataFrame, hops: list, max_iterations: int) -> DataFrame:
+    """Driver-side semi-naive closure over ``hops``, the fetched rows of
+    the hop table ``up`` — bit-identical semantics to the distributed
+    loop (multiset row semantics of the iterated join, same depth
+    numbering, same non-convergence error)."""
     from collections import defaultdict
 
     import pandas as pd
@@ -68,7 +68,7 @@ def _driver_closure(
 
     up_map: dict = defaultdict(list)
     direct_rows: list[tuple] = []
-    for r in up.collect():
+    for r in hops:
         c, p = r["_c"], r["_p"]
         up_map[c].append(p)
         direct_rows.append((c, p, 1))
@@ -95,16 +95,13 @@ def _driver_closure(
             T.StructField("depth", T.IntegerType(), False),
         ]
     )
-    if rows:
-        node_c, anc_c, dep_c = zip(*rows)
-    else:
-        node_c, anc_c, dep_c = (), (), ()
+    node_c, anc_c, dep_c = zip(*rows) if rows else ((), (), ())
     # columnar build: pd.DataFrame over three sequences is ~an order of
     # magnitude cheaper than row-tuple ingestion at closure sizes
     pdf = pd.DataFrame(
         {"node": node_c, "ancestor": anc_c, "depth": dep_c}
     )
-    return edges.sparkSession.createDataFrame(pdf, schema)
+    return up.sparkSession.createDataFrame(pdf, schema)
 
 
 def transitive_closure(
@@ -124,9 +121,7 @@ def transitive_closure(
     and — when it is ontology-sized — broadcast, so each hop is a
     single shuffle-free job: map over the cached frontier, broadcast
     hash join, lazy checkpoint whose ``count()`` both materializes it
-    and answers the fixpoint test. (Previously every hop paid an eager
-    checkpoint job PLUS a separate isEmpty job over a shuffle join
-    that re-read the source.)
+    and answers the fixpoint test.
     """
     direct = edges.select(
         F.col(child_col).alias("node"),
@@ -137,18 +132,15 @@ def transitive_closure(
     up = direct.select(
         F.col("node").alias("_c"), F.col("ancestor").alias("_p")
     ).localCheckpoint(eager=False)  # static hop table, materialized once
-    n_edges = up.count()
-    if n_edges <= DRIVER_EDGE_ROWS:
-        # Driver route (the kmeans_fit/bpe_train auto-switch
-        # convention): the hop table IS the whole working set and it is
-        # ontology-sized, so ~tree-depth sequential Spark jobs — each a
-        # scheduler round-trip over a few thousand cached rows — are
-        # pure latency. Collect the pairs once, run the identical
-        # semi-naive extension in Python (same multiset semantics: one
-        # output row per (frontier row x matching hop edge), same
-        # cycle guard), and hand back ONE Arrow-built DataFrame.
-        return _driver_closure(edges, up, max_iterations)
-    hop = F.broadcast(up) if n_edges <= BROADCAST_HOP_ROWS else up
+    hops = routing.bounded_fetch(up, routing.DRIVER_EDGE_ROWS)
+    if hops is not None:
+        # Driver route: the hop table IS the ontology-sized working
+        # set, so ~tree-depth sequential Spark jobs are pure latency.
+        # Run the identical semi-naive extension in Python (one output
+        # row per (frontier row x matching hop edge), same cycle guard)
+        # and hand back ONE Arrow-built DataFrame.
+        return _driver_closure(up, hops, max_iterations)
+    hop = F.broadcast(up) if up.count() <= BROADCAST_HOP_ROWS else up
     closure = direct
     frontier = direct
     for _ in range(max_iterations):
@@ -219,12 +211,16 @@ def first_common_ancestor(
     full_plan = closure.select("node", "ancestor", "depth").unionByName(
         self_rows
     )
-    full = full_plan.localCheckpoint(eager=True)
-    n_full = full.count()
-    if n_full <= FCA_LOCAL_ROWS:
+    local = routing.bounded_fetch(full_plan, FCA_LOCAL_ROWS)
+    if local is not None:
+        import pandas as pd
+
         full = closure.sparkSession.createDataFrame(
-            full.toPandas(), schema=full_plan.schema
+            pd.DataFrame.from_records(local, columns=full_plan.columns),
+            schema=full_plan.schema,
         )
+    else:
+        full = full_plan.localCheckpoint(eager=True)
     la = full.alias("__fca_l")
     rb = full.alias("__fca_r")
     # Join 2 keys ONLY on the node: the ancestor match is expressed as

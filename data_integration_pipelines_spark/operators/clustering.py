@@ -133,27 +133,31 @@ def assign_clusters(
     def _nearest(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         # (iterator form, guide §4.5 — the centroid matrix builds once
         # per task; StructType batches yield as pd.DataFrame)
-        k = len(cids_np)
+        k, dim = len(centroids), len(centroids[0][1]) if centroids else 0
         for s in batches:
-            n = len(s)
-            if n == 0:
-                yield pd.DataFrame(
-                    {
-                        "cluster": np.empty(0, dtype=np.int64),
-                        "dist": np.empty(0, dtype=np.int64),
-                    }
-                )
-                continue
-            x = np.asarray(s.to_list(), dtype=np.int64) * C_SCALE
-            d = np.empty((n, k), dtype=np.int64)
+            # a NULL, wrong-length or NULL-component vector scores
+            # (NULL, NULL), as in the expression twin (zip_with pads the
+            # short side with NULL and the distance sum goes NULL)
+            ok = np.array([v is not None and len(v) == dim for v in s], bool)
+            x = np.array([v for v, g in zip(s, ok) if g] or np.empty((0, dim)))
+            if x.dtype.kind == "f":  # Arrow's float64 + NaN for NULL components
+                good = ~np.isnan(x).any(axis=1)
+                ok[ok], x = good, x[good]
+            x = x.astype(np.int64) * C_SCALE
+            d = np.empty((len(x), k), dtype=np.int64)
             for j in range(k):
                 diff = x - cents_np[j]
                 # exact int64 accumulation — same overflow contract as
                 # the JVM-long expression twin
                 d[:, j] = np.einsum("ij,ij->i", diff, diff)
             idx = d.argmin(axis=1)  # first min == lowest cid
+            cluster, dist = np.zeros((2, len(s)), dtype=np.int64)
+            cluster[ok], dist[ok] = cids_np[idx], d[np.arange(len(x)), idx]
             yield pd.DataFrame(
-                {"cluster": cids_np[idx], "dist": d[np.arange(n), idx]}
+                {
+                    "cluster": pd.arrays.IntegerArray(cluster, ~ok),
+                    "dist": pd.arrays.IntegerArray(dist, ~ok),
+                }
             )
 
     # asNondeterministic (guide §4.4): extracting .cluster and .dist
@@ -253,25 +257,26 @@ def kmeans_fit(
     # of blocking jobs, so every job removed is wall time at ANY
     # scale). Only a large k, where collecting k rows before knowing D
     # could be genuinely unbounded, pays the defensive probe first.
+    # reseed_empty=False: the auto-switch must preserve the driver
+    # loop's drop-out semantics EXACTLY (same function, same answer,
+    # whichever side of the cap k*D lands on); callers who want
+    # reseeding opt in via kmeans_fit_table directly
+    def table_path():
+        return kmeans_fit_table(
+            df, id_col, vec_col, k, iters,
+            checkpoint_dir=checkpoint_dir, reseed_empty=False,
+        )
+
     if k > PROBE_FREE_K:
         probe = df.select(vec_col).first()
         if probe is None:
             raise ValueError("kmeans_fit on an empty DataFrame")
-        if k * len(probe[0]) > MAX_CENTROID_CELLS:
-            # reseed_empty=False: the auto-switch must preserve the
-            # driver loop's drop-out semantics EXACTLY (same function,
-            # same answer, whichever side of the cap k*D lands on);
-            # callers who want reseeding opt in via kmeans_fit_table
-            # directly
-            return kmeans_fit_table(
-                df,
-                id_col,
-                vec_col,
-                k,
-                iters,
-                checkpoint_dir=checkpoint_dir,
-                reseed_empty=False,
+        if probe[0] is None:
+            raise ValueError(
+                f"kmeans_fit: the dimension probe row's {vec_col!r} is NULL"
             )
+        if k * len(probe[0]) > MAX_CENTROID_CELLS:
+            return table_path()
 
     # spread() before the persist: the per-iteration assignment map is
     # a heavy batch kernel (O(k*D) per row), and an unsplittable
@@ -305,21 +310,16 @@ def kmeans_fit(
     )
     if not seed_rows:
         raise ValueError("kmeans_fit on an empty DataFrame")
+    if any(r["qvec"] is None for r in seed_rows):
+        qdf.unpersist(blocking=False)
+        raise ValueError(f"kmeans_fit: a seed row's {vec_col!r} is NULL")
     dim = len(seed_rows[0]["qvec"])
     if k * dim > MAX_CENTROID_CELLS:
         # small-k probe-free path crossed the cell cap after all
         # (huge-D vectors): delegate to the table path, identical
         # semantics to the probe-first branch above
         qdf.unpersist(blocking=False)
-        return kmeans_fit_table(
-            df,
-            id_col,
-            vec_col,
-            k,
-            iters,
-            checkpoint_dir=checkpoint_dir,
-            reseed_empty=False,
-        )
+        return table_path()
     centroids = [
         (int(r["id"]), [int(v) * C_SCALE for v in r["qvec"]]) for r in seed_rows
     ]

@@ -32,21 +32,8 @@ from ..functions.text import (
     ws_tokens,
 )
 from ..functions.quantize import e4
+from . import routing
 from .cache import bounded_persist
-
-#: Distinct candidate-pair edge sets at or under this row count resolve
-#: to components on the driver (collect once, Python union-find, one
-#: Arrow createDataFrame back) — matching closure.DRIVER_EDGE_ROWS.
-#: Two longs per edge: a few MB at the cap.
-DRIVER_CC_EDGE_ROWS = 250_000
-
-
-def relative_doc_freq_cap(n_docs: int, fraction: float = 0.01, floor: int = 64) -> int:
-    """Stop-shingle df cap that scales with the corpus: a shingle
-    appearing in more than ``fraction`` of documents (floored so tiny
-    test corpora are never capped) is a join island at scale — 1M docs
-    sharing one shingle is a 10^12-row join bucket."""
-    return max(floor, int(n_docs * fraction))
 
 
 def relative_doc_freq_cap_expr(
@@ -55,8 +42,11 @@ def relative_doc_freq_cap_expr(
     fraction: float = 0.01,
     floor: int = 64,
 ):
-    """Lazy twin of ``relative_doc_freq_cap``: the corpus count folds in
-    as a SCALAR SUBQUERY instead of an eager ``docs.count()`` at
+    """Stop-shingle df cap that scales with the corpus: a shingle
+    appearing in more than ``fraction`` of documents (floored so tiny
+    test corpora are never capped) is a join island at scale — 1M docs
+    sharing one shingle is a 10^12-row join bucket. The corpus count
+    folds in as a SCALAR SUBQUERY instead of an eager ``docs.count()`` at
     plan-construction time — no extra Spark job per invocation, and at
     100 TB no full scan before the query even starts (Catalyst runs the
     subquery once alongside the main plan). Pass the result as
@@ -519,9 +509,10 @@ def simhash_hamming_pairs(
     )
 
 
-def _driver_cc(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find over a collected (u, v) edge set —
-    bit-identical output contract to the distributed star loop:
+def _driver_cc(edges: DataFrame, rows: list) -> DataFrame:
+    """Driver-side union-find over ``rows``, the fetched (u, v) edge
+    set of ``edges`` — bit-identical output contract to the distributed
+    star loop:
     ``(id, cluster_id)`` for every node appearing in any edge, with
     ``cluster_id`` = the component's minimum member id. Attaching the
     larger root under the smaller keeps every root the minimum of its
@@ -538,7 +529,7 @@ def _driver_cc(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in edges.collect():
+    for r in rows:
         u, v = r["u"], r["v"]
         if u not in parent:
             parent[u] = u
@@ -553,12 +544,7 @@ def _driver_cc(edges: DataFrame) -> DataFrame:
     ids = list(parent)
     roots = [find(x) for x in ids]
     dtype = edges.schema["u"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("id", dtype, True),
-            T.StructField("cluster_id", dtype, True),
-        ]
-    )
+    schema = T.StructType([T.StructField("id", dtype), T.StructField("cluster_id", dtype)])
     pdf = pd.DataFrame({"id": ids, "cluster_id": roots})
     return edges.sparkSession.createDataFrame(pdf, schema)
 
@@ -604,22 +590,22 @@ def connected_components(
 
     Routing (r11, the kmeans_fit/bpe_train/transitive_closure
     auto-switch convention): when the DISTINCT edge set is at or under
-    :data:`DRIVER_CC_EDGE_ROWS`, the pair graph is candidate-pair-sized
-    (the banded/blocked generators upstream emit near-dup candidates,
-    not the corpus), so the O(log^2 n) star rounds — each ~4 shuffles
-    plus a signature action over a few thousand cached rows — are pure
-    scheduler latency. Collect the edges once, run union-find with
-    min-id roots in Python (same component semantics, same min-member
-    cluster_id), and hand back ONE Arrow-built DataFrame. Graphs above
-    the cap keep the distributed star loop — that is the 100 TB path.
+    :data:`routing.DRIVER_EDGE_ROWS`, the pair graph is
+    candidate-pair-sized (the banded/blocked generators upstream emit
+    near-dup candidates, not the corpus), so the O(log^2 n) star rounds
+    — each ~4 shuffles plus a signature action — are pure scheduler
+    latency. The bounded fetch of the checkpointed edges feeds
+    union-find with min-id roots in Python (same components, same
+    min-member cluster_id) and ONE Arrow-built DataFrame comes back.
+    Graphs above the cap keep the distributed star loop (the 100 TB path).
     """
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def _ckpt(e: DataFrame) -> DataFrame:
-        # lazy checkpoint: the signature action right after materializes
-        # the checkpoint AND reads the convergence stats in ONE job
-        # (eager=True would run a separate materialization job per round)
+        # lazy checkpoint: the action right after it (the route fetch,
+        # then each round's signature) materializes it — eager=True
+        # would run a separate materialization job per round
         if checkpoint_dir is not None:
             return e.checkpoint(eager=False)
         return e.localCheckpoint(eager=False)
@@ -675,9 +661,10 @@ def connected_components(
         own = mins.select("u", F.col("m").alias("v"))
         return relink.union(own).distinct()
 
+    rows = routing.bounded_fetch(edges, routing.DRIVER_EDGE_ROWS)
+    if rows is not None:
+        return _driver_cc(edges, rows)
     sig = _signature(edges)
-    if sig[0] <= DRIVER_CC_EDGE_ROWS:
-        return _driver_cc(edges)
     edges = _rightsized(edges, sig[0])
     for _ in range(max_iter):
         edges = _ckpt(_small_star(_large_star(edges)))

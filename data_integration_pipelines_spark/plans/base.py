@@ -14,20 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: an oracle is ANSI SQL for DuckDB (None -> rows-only check). A
-#: CALLABLE defers expensive SQL construction (golden-table VALUES
-#: literals, multi-MB JSON parses) to first access — importing the
-#: plans package stays cheap for callers that never compare oracles
-#: (ADVICE r7: the BPE goldens parsed a 6352-line JSON at import).
-OracleSrc = "str | None | Callable[[], str]"
-
-
 class Query:
     """Registry entry pairing a Spark plan with its DuckDB oracle.
 
-    ``oracle`` resolves lazily: pass a zero-arg callable to defer SQL
-    construction to first access (cached thereafter); reading
-    ``q.oracle`` always yields ``str | None``."""
+    ``oracle`` is ANSI SQL for DuckDB (None -> rows-only check) and
+    resolves lazily: pass a zero-arg callable to defer SQL construction
+    (golden-table VALUES literals, multi-MB JSON parses) to first access
+    (cached thereafter), so importing the plans package stays cheap;
+    reading ``q.oracle`` always yields ``str | None``."""
 
     __slots__ = ("name", "fn", "_oracle", "doc", "headline", "time_build")
 

@@ -160,7 +160,7 @@ def streaming_ingest_verdicts(
     (a recreated checkpoint re-batches the staging dir from 0 with a
     possibly different file mix, so skipping "complete" partitions
     would leave stale/missing rows): the log records its lineage
-    identity (sketch_fold._lineage_identity — StreamingQuery id or
+    identity (sketch_fold._lineage_identities — StreamingQuery id or
     creation nonce, not the path string) on first write and REFUSES a
     different one — use a fresh log for a fresh lineage."""
 

@@ -40,21 +40,13 @@ def fold_cms_batch(
     return partial if existing is None else cms_merge(existing, partial)
 
 
-def _lineage_identity(checkpoint_path: str) -> str:
-    """A string that changes whenever the checkpoint at this path is a
-    NEW lineage: the StreamingQuery id from ``<ckpt>/metadata`` (Spark
-    mints a fresh id when the dir is recreated). When the metadata is
-    not there yet (direct foreachBatch-body tests), a uuid nonce is
-    stamped once into the checkpoint dir and reused — deleting the
-    checkpoint deletes the nonce, so recreation still reads as a new
-    lineage. Binding to the PATH alone would let delete-and-recreate
-    at the same path pass the guard and silently double-fold."""
-    return _lineage_identities(checkpoint_path)[0]
-
-
 def _lineage_identities(checkpoint_path: str) -> list[str]:
     """All identities that denote the CURRENT lineage at this path,
-    preferred first. More than one exists when a checkpoint was first
+    preferred first: the StreamingQuery id from ``<ckpt>/metadata``
+    (Spark mints a fresh id when the dir is recreated), else a uuid nonce
+    stamped once into the dir. Binding to the PATH alone would let
+    delete-and-recreate at the same path pass the guard and silently
+    double-fold. More than one exists when a checkpoint was first
     used via a direct foreachBatch-body call (nonce stamped) and later
     driven by a real StreamingQuery (Spark writes ``metadata`` with a
     query id into the SAME still-live dir): both ids then name one

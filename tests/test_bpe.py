@@ -136,15 +136,29 @@ def test_bpe_train_matches_reference_on_real_documents(spark):
 
 
 def test_bpe_train_distributed_route_matches_reference(spark, monkeypatch):
-    # r11: small vocabs auto-route to a driver-side merge loop; force
-    # the DISTRIBUTED loop (cap = 0 cells) so its parity against the
-    # reference — and against the driver route — stays pinned
+    # r11: small vocabs auto-route to a driver-side merge loop. Pin the
+    # cap's boundary (cap = the vocab's char-token cells -> driver
+    # route, one less -> the DISTRIBUTED loop) so the parity of the
+    # distributed loop against the reference — and against the driver
+    # route — stays pinned
     from data_integration_pipelines_spark.operators import bpe as bpe_mod
 
+    driver_train = bpe_mod._driver_train
+    driver_calls = []
+
+    def spy(*args):
+        driver_calls.append(1)
+        return driver_train(*args)
+
+    monkeypatch.setattr(bpe_mod, "_driver_train", spy)
     docs = spark.createDataFrame([(t,) for t in CORPUS], "text string")
+    cells = sum(len(w) + 1 for w in {w for t in CORPUS for w in t.split()})
+    monkeypatch.setattr(bpe_mod, "MAX_DRIVER_VOCAB_CELLS", cells)
     via_driver = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
-    monkeypatch.setattr(bpe_mod, "MAX_DRIVER_VOCAB_CELLS", 0)
+    assert len(driver_calls) == 1
+    monkeypatch.setattr(bpe_mod, "MAX_DRIVER_VOCAB_CELLS", cells - 1)
     via_cluster = [tuple(r) for r in bpe_train(docs, n_merges=12).collect()]
+    assert len(driver_calls) == 1
     want, _ = ref_bpe_train(CORPUS, n_merges=12)
     assert via_cluster == want
     assert via_driver == via_cluster

@@ -107,6 +107,51 @@ def test_assign_arrow_kernel_tie_breaks_on_duplicate_centroids(spark):
     assert all(c != 7 for c, _ in got.values())  # ties never pick the larger cid
 
 
+def test_assign_arrow_kernel_scores_bad_vectors_null(spark):
+    """A NULL, wrong-length or NULL-component vector scores (NULL, NULL)
+    in the Arrow kernel, as in the expression twin, while the valid
+    rows of the same batch keep their nearest centroid."""
+    from data_integration_pipelines_spark.operators.clustering import (
+        assign_clusters_exprs,
+    )
+
+    qdf = spark.createDataFrame(
+        [(0, [1, 2]), (1, None), (2, [1]), (3, [3, None]), (4, [0, 1])],
+        "id long, qvec array<bigint>",
+    ).coalesce(1)
+    cents = [(0, [100, 200]), (1, [0, 100])]
+    got = {r["id"]: (r["cluster"], r["dist"]) for r in assign_clusters(qdf, cents).collect()}
+    want = {
+        r["id"]: (r["cluster"], r["dist"])
+        for r in assign_clusters_exprs(qdf, cents).collect()
+    }
+    assert got == want
+    assert got == {0: (0, 0), 1: (None, None), 2: (None, None), 3: (None, None), 4: (1, 0)}
+
+
+def test_kmeans_fit_null_probe_vector_raises_named_error(spark):
+    """k above PROBE_FREE_K probes one row for the dimension first; a
+    NULL vector there is a named ValueError, not a TypeError on len()."""
+    from data_integration_pipelines_spark.operators.clustering import PROBE_FREE_K
+
+    df = spark.createDataFrame(
+        [(0, None), (1, [0.5, 0.5])], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="dimension probe row's 'embedding' is NULL"):
+        kmeans_fit(df, k=PROBE_FREE_K + 1, iters=1)
+
+
+def test_kmeans_fit_null_seed_vector_raises_named_error(spark):
+    """Small k takes the dimension from the seed rows (the k lowest
+    ids); a NULL vector among them is a named ValueError."""
+    df = spark.createDataFrame(
+        [(i, None if i == 0 else [0.1 * i, 1.0]) for i in range(9)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="seed row's 'embedding' is NULL"):
+        kmeans_fit(df, k=2, iters=1)
+
+
 def test_quantize_vec_rounds_half_away(spark):
     df = spark.createDataFrame([Row(v=[0.00005, -0.00005, 0.12344])])
     got = df.select(quantize_vec(F.col("v")).alias("q")).first()["q"]

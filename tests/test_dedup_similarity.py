@@ -300,13 +300,22 @@ class TestConnectedComponents:
             assert self._run(spark, pairs) == _union_find_clusters(pairs)
 
     def test_distributed_star_loop_matches_driver_route(self, spark, monkeypatch):
-        # Small graphs auto-route to driver union-find; force the
-        # distributed star loop (the 100 TB path) and pin route parity
-        # on chains, hubs, duplicates and a random graph.
+        # Small graphs auto-route to driver union-find. Pin the cap's
+        # boundary (cap = distinct edge count -> driver route, one less
+        # -> the distributed star loop, the 100 TB path) and route
+        # parity on chains, hubs, duplicates and a random graph.
         import random
 
-        from data_integration_pipelines_spark.operators import dedup
+        from data_integration_pipelines_spark.operators import dedup, routing
 
+        driver_cc = dedup._driver_cc
+        driver_calls = []
+
+        def spy(*args):
+            driver_calls.append(1)
+            return driver_cc(*args)
+
+        monkeypatch.setattr(dedup, "_driver_cc", spy)
         rng = random.Random(7)
         cases = [
             [(1, 2), (2, 3), (3, 4)],
@@ -319,10 +328,14 @@ class TestConnectedComponents:
         ]
         for pairs in cases:
             pairs = [(a, b) for a, b in pairs if a != b]
+            n_edges = len(set(pairs))
+            monkeypatch.setattr(routing, "DRIVER_EDGE_ROWS", n_edges)
             driver_got = self._run(spark, pairs)
-            monkeypatch.setattr(dedup, "DRIVER_CC_EDGE_ROWS", 0)
+            assert len(driver_calls) == 1
+            monkeypatch.setattr(routing, "DRIVER_EDGE_ROWS", n_edges - 1)
             dist_got = self._run(spark, pairs)
-            monkeypatch.undo()
+            assert len(driver_calls) == 1
+            driver_calls.clear()
             assert dist_got == driver_got == _union_find_clusters(pairs)
 
 

@@ -97,32 +97,45 @@ class TestClosure:
             transitive_closure(edges, max_iterations=5)
 
     def test_distributed_route_matches_driver_route(self, spark, monkeypatch):
-        # r11: small hop tables auto-route to a driver-side BFS; force
-        # the DISTRIBUTED loop (cap = 0) and pin parity — including the
-        # multiset row semantics of a multi-parent DAG (two paths to
-        # the same ancestor = two rows on both routes)
+        # r11: small hop tables auto-route to a driver-side BFS. Pin the
+        # cap's boundary (cap = the 5 hop rows -> driver route, 4 -> the
+        # DISTRIBUTED loop) and route parity — including the multiset
+        # row semantics of a multi-parent DAG (two paths to the same
+        # ancestor = two rows on both routes)
         from data_integration_pipelines_spark.operators import closure as cl
+        from data_integration_pipelines_spark.operators import routing
 
+        driver_closure = cl._driver_closure
+        driver_calls = []
+
+        def spy(*args):
+            driver_calls.append(1)
+            return driver_closure(*args)
+
+        monkeypatch.setattr(cl, "_driver_closure", spy)
         edges = spark.createDataFrame(
             # diamond DAG (4 has parents 2 and 3, both under 1) + chain
             [(2, 1), (3, 1), (4, 2), (4, 3), (5, 4)],
             ["child", "parent"],
         )
+        monkeypatch.setattr(routing, "DRIVER_EDGE_ROWS", 5)
         via_driver = sorted(
             map(tuple, transitive_closure(edges).collect())
         )
-        monkeypatch.setattr(cl, "DRIVER_EDGE_ROWS", 0)
+        assert len(driver_calls) == 1
+        monkeypatch.setattr(routing, "DRIVER_EDGE_ROWS", 4)
         via_cluster = sorted(
             map(tuple, transitive_closure(edges).collect())
         )
+        assert len(driver_calls) == 1
         assert via_driver == via_cluster
         # the diamond contributes TWO (4, 1, 2) rows — one per path
         assert via_driver.count((4, 1, 2)) == 2
 
     def test_cycle_raises_distributed(self, spark, monkeypatch):
-        from data_integration_pipelines_spark.operators import closure as cl
+        from data_integration_pipelines_spark.operators import routing
 
-        monkeypatch.setattr(cl, "DRIVER_EDGE_ROWS", 0)
+        monkeypatch.setattr(routing, "DRIVER_EDGE_ROWS", 0)
         edges = spark.createDataFrame([(1, 2), (2, 1)], ["child", "parent"])
         with pytest.raises(RuntimeError, match="did not converge"):
             transitive_closure(edges, max_iterations=5)
@@ -164,7 +177,8 @@ class TestClosure:
         inside first_common_ancestor so the two broadcast joins either
         share one exchange (ReusedExchange) or ship constraint-pruned
         subsets — and the rows must be identical to the checkpoint
-        (forced above-cap) path."""
+        path. The cap's boundary is pinned: cap = the self-augmented
+        closure's row count keeps the local route, one less checkpoints."""
         from data_integration_pipelines_spark.operators import closure as cl
 
         edges = spark.range(1, 500).select(
@@ -174,6 +188,8 @@ class TestClosure:
         pairs = spark.range(1, 60).select(
             F.col("id").alias("a"), ((F.col("id") * 13) % 120).alias("b")
         )
+        n_full = closure.count() + 500  # + one depth-0 row per node 0..499
+        monkeypatch.setattr(cl, "FCA_LOCAL_ROWS", n_full)
         local_df = first_common_ancestor(closure, pairs)
         local_df.collect()
         plan = local_df._jdf.queryExecution().executedPlan().toString()
@@ -182,10 +198,46 @@ class TestClosure:
         # two full RDD-leaf broadcasts
         assert "ReusedExchange" in plan or plan.count("LocalTableScan") >= 2
         want = sorted(map(tuple, local_df.collect()))
-        monkeypatch.setattr(cl, "FCA_LOCAL_ROWS", 0)
+        monkeypatch.setattr(cl, "FCA_LOCAL_ROWS", n_full - 1)
         ckpt_df = first_common_ancestor(closure, pairs)
         assert sorted(map(tuple, ckpt_df.collect())) == want
         assert "LocalTableScan" not in ckpt_df._jdf.queryExecution().executedPlan().toString()
+
+    def test_driver_routes_build_in_one_fetch_job(self, spark):
+        """Each size router decides and delivers its driver route with
+        ONE bounded fetch. On 16-partition inputs that never shuffle,
+        building the closure and the components runs one job each (the
+        count probe + collect took 3), and the FCA local rebuild runs
+        two (the distinct's exchange stage, then the fetch; the eager
+        checkpoint + count + toPandas took 5)."""
+        from data_integration_pipelines_spark.operators.dedup import (
+            connected_components,
+        )
+
+        edges = spark.range(1, 200, numPartitions=16).select(
+            F.col("id").alias("child"), F.floor((F.col("id") - 1) / 2).alias("parent")
+        )
+        pairs = spark.range(0, 200, numPartitions=16).select(
+            F.col("id").alias("id_a"), (F.col("id") % 7 + 1000).alias("id_b")
+        )
+        probe = spark.range(1, 30).select(
+            F.col("id").alias("a"), (F.col("id") * 3 % 50).alias("b")
+        )
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def build_jobs(group, build):
+            sc.setJobGroup(group, group)
+            try:
+                out = build()
+            finally:
+                sc.setJobGroup(None, None)
+            return out, len(tracker.getJobIdsForGroup(group))
+
+        closure, n_closure = build_jobs("route-closure", lambda: transitive_closure(edges))
+        _, n_fca = build_jobs("route-fca", lambda: first_common_ancestor(closure, probe))
+        _, n_cc = build_jobs("route-cc", lambda: connected_components(pairs))
+        assert n_closure <= 1 and n_fca <= 2 and n_cc <= 1, (n_closure, n_fca, n_cc)
 
     def test_agreement_classes(self, spark):
         df = spark.createDataFrame(
