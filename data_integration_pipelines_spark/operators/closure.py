@@ -47,12 +47,13 @@ BROADCAST_HOP_ROWS = 1_000_000
 #: a degenerate closure far above ontology scale — region_agreement's
 #: 280k-row binary-heap fixture — measured ~1 s/run of planning cost
 #: against a ~0.1 s broadcast saving and keeps the checkpoint leaf.
-#: Routed by one :func:`routing.bounded_fetch` of the closure plan: over
-#: the cap it moves and drops at most FCA_LOCAL_ROWS + 1 rows, then
-#: checkpoints. The shared exchange needs Catalyst to keep the ``<=`` /
-#: ``>=`` ancestor pair of the second join a residual condition; a Spark
-#: upgrade that folds it into an equi-key brings the second exchange back
-#: (caught by ``test_fca_local_route_parity_and_single_broadcast_build``).
+#: Routed by one :func:`routing.bounded_fetch` of the lazily checkpointed
+#: closure: over the cap it moves and drops at most FCA_LOCAL_ROWS + 1
+#: rows, and the large route reads the same checkpoint. The shared
+#: exchange needs Catalyst to keep the ``<=`` / ``>=`` ancestor pair of
+#: the second join a residual condition; a Spark upgrade that folds it
+#: into an equi-key brings the second exchange back (caught by
+#: ``test_fca_local_route_parity_and_single_broadcast_build``).
 FCA_LOCAL_ROWS = 65_536
 
 
@@ -204,14 +205,17 @@ def first_common_ancestor(
     )
     # Materialize once: the closure arrives as a union of per-iteration
     # checkpoints; without this the double broadcast below replicates
-    # that whole lineage into every task binary. Ontology-sized
-    # closures rebuild as ONE driver-local relation so both broadcast
-    # joins share a single BroadcastExchange (see FCA_LOCAL_ROWS);
-    # bigger closures keep the checkpoint leaf (two sends, one build).
+    # that whole lineage into every task binary. The fetch fills the
+    # lazy checkpoint, so the union and its node distinct run once on
+    # either route. Ontology-sized closures rebuild as ONE driver-local
+    # relation so both broadcast joins share a single BroadcastExchange
+    # (see FCA_LOCAL_ROWS); bigger closures keep the checkpoint leaf
+    # (two sends, one build).
     full_plan = closure.select("node", "ancestor", "depth").unionByName(
         self_rows
     )
-    local = routing.bounded_fetch(full_plan, FCA_LOCAL_ROWS)
+    full = full_plan.localCheckpoint(eager=False)
+    local = routing.bounded_fetch(full, FCA_LOCAL_ROWS)
     if local is not None:
         import pandas as pd
 
@@ -219,8 +223,6 @@ def first_common_ancestor(
             pd.DataFrame.from_records(local, columns=full_plan.columns),
             schema=full_plan.schema,
         )
-    else:
-        full = full_plan.localCheckpoint(eager=True)
     la = full.alias("__fca_l")
     rb = full.alias("__fca_r")
     # Join 2 keys ONLY on the node: the ancestor match is expressed as

@@ -32,10 +32,14 @@ order anywhere; the fixture's assignment boundaries cannot flip
 between engines.
 
 SemDeDup (Abbas et al. 2023: cluster the corpus, then near-dedup
-*within* clusters) composes on top: the final assignment keys an
-equi-self-join per cluster, so candidate pairs are ~N*avg_cluster_size
+*within* clusters) composes on top: the final assignment groups the
+pair scoring by cluster, so candidate pairs are ~N*avg_cluster_size
 instead of N^2; at 100 TB you grow k with N to hold cluster sizes
 bounded (k ~ N/5000), exactly how the paper runs on LAION-scale data.
+One kernel scores every cluster: rows split into rank blocks of at
+most ``MAX_BLOCK`` rows and each block pair is one gram matrix, so no
+task holds more than ``MAX_BLOCK``^2 gram cells however skewed a
+cluster is (an ordinary cluster is one block).
 
 Reference parity: the reference has no clustering (its pipelines stop
 at per-row validation; cf. SURVEY §2.9) — this extends the curation
@@ -877,8 +881,8 @@ def semdedup(
     """The SemDeDup pipeline end-to-end behind the auto-routing front
     door: :func:`semdedup_assign` (exact flat fit below the N·k·D cap,
     sample-fit + pivoted probing above) then the keep-one policy
-    (:func:`semdedup_survivors`, itself auto-blocking oversized
-    clusters). Returns the per-cluster (cluster, n_members, n_removed,
+    (:func:`semdedup_survivors`, whose pair kernel rank-blocks every
+    cluster). Returns the per-cluster (cluster, n_members, n_removed,
     n_kept) funnel."""
     return semdedup_survivors(
         semdedup_assign(df, k, iters, id_col, vec_col, flat_cells), threshold
@@ -887,148 +891,64 @@ def semdedup(
 
 _PAIR_SCHEMA = "cluster bigint, id_a bigint, id_b bigint, cosine_e4 bigint"
 
-#: clusters above this row count route through the blocked kernel
-#: (``semdedup_pairs_blocked``) so one skewed/duplicate-heavy cluster
-#: can never materialize an unbounded gram matrix in a single task.
-DEFAULT_MAX_BLOCK = 4096
-
-
-def _pairs_unblocked(
-    assigned: DataFrame,
-    threshold: float,
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """One applyInPandas group per cluster, one gram matrix per group —
-    the fast path for clusters that fit the per-task memory budget."""
-    import numpy as np
-    import pandas as pd
-
-    def pairs_of(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        X = np.array(pdf[qvec_col].tolist(), dtype=np.float64)[order]
-        gram = X @ X.T  # exact: integer-valued entries < 2^53
-        nrm = np.sqrt((X * X).sum(axis=1))
-        cos = gram / np.outer(nrm, nrm)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        vals = cos[iu, ju]
-        m = vals >= threshold
-        from ..functions.quantize import np_e4
-
-        return pd.DataFrame(
-            {
-                "cluster": np.full(int(m.sum()), int(pdf["cluster"].iloc[0])),
-                "id_a": ids[iu[m]],
-                "id_b": ids[ju[m]],
-                "cosine_e4": np_e4(vals[m]),
-            }
-        )
-
-    return (
-        assigned.select("cluster", "id", qvec_col)
-        .groupBy("cluster")
-        .applyInPandas(pairs_of, _PAIR_SCHEMA)
-    )
+#: rows per rank block of :func:`semdedup_pairs`: no task scores more
+#: than MAX_BLOCK^2 gram cells, however skewed a cluster is. Read at
+#: call time, so a test that patches it forces multi-block clusters.
+MAX_BLOCK = 4096
 
 
 def semdedup_pairs(
     assigned: DataFrame,
     threshold: float,
     qvec_col: str = "qvec",
-    max_block: int | None = DEFAULT_MAX_BLOCK,
 ) -> DataFrame:
     """Within-cluster cosine near-duplicate pairs over the quantized
-    vectors: ONE shuffle groups each cluster onto an executor, then a
-    vectorized numpy gram matrix scores all intra-cluster pairs (the
-    SemDeDup paper's kernel — candidates are ~N*cluster_size, never
-    N^2; at 100 TB k grows with N so each group stays matmul-sized).
+    vectors: a vectorized numpy gram matrix scores the intra-cluster
+    pairs (the SemDeDup paper's kernel — candidates are
+    ~N*cluster_size, never N^2; at 100 TB k grows with N so each group
+    stays matmul-sized). Returns (cluster, id_a, id_b, cosine_e4) —
+    the cosine as basis-point BIGINT (hash-proof output contract,
+    functions/quantize.py).
+
+    Every cluster is rank-blocked: its rows split into blocks of
+    exactly <= MAX_BLOCK rows (row_number over id, divided by
+    MAX_BLOCK) and every BLOCK PAIR (i <= j) is its own applyInPandas
+    group scoring only i x j. That is a hard per-task memory bound of
+    MAX_BLOCK^2 gram cells, where a hash-modulo split would only bound
+    the expectation (a tail-heavy hash block could still OOM an
+    executor sized to the cap), so a duplicate-heavy corpus that
+    concentrates 10^6 vectors in one cluster cannot OOM a task. A
+    cluster of at most MAX_BLOCK rows is one block and one group
+    (0, 0): one gram matrix over the whole cluster. Pair (a, b) lands
+    in exactly the group of its two blocks, so the pair set does not
+    depend on MAX_BLOCK; compute stays quadratic in cluster size (that
+    is SemDeDup's semantics), only MEMORY is capped. A row is
+    replicated into its cluster's block count, ceil(n / MAX_BLOCK),
+    of groups.
 
     Engine-exact despite numpy: quantized components are integers, so
     every product (<= 4e7) and every partial sum (<= 3e9) is an
     integer far below 2^53 — dgemm order and FMA cannot perturb an
     exact integer result. Norms are one IEEE sqrt each, the cosine one
     multiply + one divide — bit-identical to the SQL engines, so the
-    threshold compare cannot flip. Returns (cluster, id_a, id_b,
-    cosine_e4) — the cosine as basis-point BIGINT (hash-proof output
-    contract, functions/quantize.py).
-
-    Skew safety is automatic: clusters larger than ``max_block`` rows
-    are routed through :func:`semdedup_pairs_blocked` (identical pairs
-    by construction, per-task memory hard-bounded at max_block^2 gram
-    cells) inside the SAME plan — a one-small-agg broadcast join tags
-    each row with its cluster size, the two row sets take their
-    kernels, and the union is the result. A duplicate-heavy corpus
-    that concentrates 10^6 vectors in one cluster therefore cannot OOM
-    an executor; ``max_block=None`` disables the split (plain kernel
-    for every cluster).
+    threshold compare cannot flip.
 
     A JVM-only formulation (zip_with/aggregate folds per pair) gives
     the same bits but ~3x the time at fixture scale: higher-order
     array functions are interpreted per pair, while this kernel is one
-    BLAS call per cluster."""
-    if max_block is None:
-        return _pairs_unblocked(assigned, threshold, qvec_col)
-    sizes = assigned.groupBy("cluster").agg(F.count("*").alias("__csz"))
-    # k rows — always broadcast-sized, never a data-scaled shuffle
-    tagged = assigned.join(F.broadcast(sizes), "cluster")
-    small = tagged.filter(F.col("__csz") <= max_block).drop("__csz")
-    # keep __csz on the big branch: the blocked kernel derives its
-    # block count from it instead of re-aggregating cluster sizes over
-    # the corpus and joining them back a second time (r12, guide §2.3
-    # — one fewer corpus aggregate + join at any scale)
-    big = tagged.filter(F.col("__csz") > max_block)
-    return _pairs_unblocked(small, threshold, qvec_col).unionByName(
-        semdedup_pairs_blocked(big, threshold, max_block, qvec_col, size_col="__csz")
-    )
-
-
-def semdedup_pairs_blocked(
-    assigned: DataFrame,
-    threshold: float,
-    max_block: int,
-    qvec_col: str = "qvec",
-    size_col: str | None = None,
-) -> DataFrame:
-    """EXACTLY ``semdedup_pairs``, with per-task memory bounded for
-    skewed clusters: a duplicate-heavy corpus can concentrate far more
-    than N/k vectors in one cluster, and the single-group gram matrix
-    is O(cluster^2) memory. Here each cluster's rows split into RANK
-    blocks (row_number over id, divided by ``max_block``) and every
-    BLOCK PAIR (i <= j) becomes its own applyInPandas group scoring
-    only i x j. Rank blocks hold exactly <= max_block rows BY
-    CONSTRUCTION — a hard per-task memory bound of max_block^2 gram
-    cells, where a hash-modulo split would only bound the expectation
-    (a tail-heavy hash block could still OOM an executor sized to the
-    cap). All-pairs coverage is exact (pair (a, b) appears in exactly
-    the group of its two blocks), so the output — and the oracle — are
-    identical to the unblocked kernel; compute stays inherently
-    quadratic in cluster size (that is SemDeDup's semantics), only
-    MEMORY is capped. Replication factor per row = its cluster's block
-    count (ceil(n/max_block)).
-
-    ``size_col``: name of a per-row cluster-size column ALREADY on
-    ``assigned`` (the auto-split front door tags one to route rows) —
-    the block count then derives per row and the kernel skips its own
-    corpus-wide size aggregate + join-back (r12, guide §2.3)."""
+    BLAS call per block pair."""
     import numpy as np
-    from pyspark.sql.window import Window
 
-    if size_col is not None:
-        nb_direct = F.greatest(
-            F.ceil(F.col(size_col) / max_block), F.lit(1)
-        ).cast("int")
-        rows = assigned.select(
-            "cluster", "id", qvec_col, nb_direct.alias("__nb")
-        )
-    else:
-        sizes = assigned.groupBy("cluster").agg(F.count("*").alias("__n"))
-        nb = F.greatest(F.ceil(F.col("__n") / max_block), F.lit(1)).cast("int")
-        rows = assigned.select("cluster", "id", qvec_col).join(
-            sizes.select("cluster", nb.alias("__nb")), "cluster"
-        )
-    rank = F.row_number().over(Window.partitionBy("cluster").orderBy("id")) - 1
-    blk = F.floor(rank / max_block).cast("int")
+    by_cluster = Window.partitionBy("cluster")
+    rank = F.row_number().over(by_cluster.orderBy("id")) - 1
+    n_blocks = F.ceil(F.count(F.lit(1)).over(by_cluster) / MAX_BLOCK)
+    rows = assigned.select(
+        "cluster",
+        "id",
+        qvec_col,
+        F.floor(rank / MAX_BLOCK).cast("int").alias("__blk"),
+        n_blocks.cast("int").alias("__nb"),
+    )
     block_pairs = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.col("__nb") - 1),
@@ -1038,84 +958,47 @@ def semdedup_pairs_blocked(
             ),
         )
     )
-    rep = (
-        rows.withColumn("__blk", blk)
-        .withColumn("__bp", F.explode(block_pairs))
-        .select(
-            "cluster",
-            F.col("__bp.i").alias("bi"),
-            F.col("__bp.j").alias("bj"),
-            "__blk",
-            "id",
-            qvec_col,
-        )
+    rep = rows.withColumn("__bp", F.explode(block_pairs)).select(
+        "cluster",
+        F.col("__bp.i").alias("bi"),
+        F.col("__bp.j").alias("bj"),
+        "__blk",
+        "id",
+        qvec_col,
     )
 
     def block_kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         from ..functions.quantize import np_e4
 
-        cluster = int(pdf["cluster"].iloc[0])
         bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
 
-        def side(mask):
-            part = pdf[mask]
+        def side(blk):
+            part = pdf[pdf["__blk"] == blk]
             ids = part["id"].to_numpy()
             order = np.argsort(ids)
-            X = np.array(part[qvec_col].tolist(), dtype=np.float64)
-            if len(ids) == 0:
-                X = X.reshape(0, 0)
-            return ids[order], X[order] if len(ids) else X
+            X = np.array(part[qvec_col].tolist(), dtype=np.float64)[order]
+            return ids[order], X, np.sqrt((X * X).sum(axis=1))
 
+        # every block of a cluster holds >= 1 row: no side is empty
+        ids_a, A, norm_a = side(bi)
         if bi == bj:
-            ids, X = side(pdf["__blk"] == bi)
-            if len(ids) < 2:
-                return pd.DataFrame(
-                    {"cluster": [], "id_a": [], "id_b": [], "cosine_e4": []}
-                ).astype(
-                    {
-                        "cluster": "int64",
-                        "id_a": "int64",
-                        "id_b": "int64",
-                        "cosine_e4": "int64",
-                    }
-                )
-            gram = X @ X.T
-            nrm = np.sqrt((X * X).sum(axis=1))
-            cos = gram / np.outer(nrm, nrm)
-            iu, ju = np.triu_indices(len(ids), k=1)
-            pair_vals = cos[iu, ju]
-            m = pair_vals >= threshold
-            vals = pair_vals[m]
-            ia, ib = ids[iu[m]], ids[ju[m]]
+            # exact: integer-valued entries < 2^53
+            cos = (A @ A.T) / np.outer(norm_a, norm_a)
+            ii, jj = np.triu_indices(len(ids_a), k=1)
+            hit = cos[ii, jj] >= threshold
+            ii, jj, ids_b = ii[hit], jj[hit], ids_a
         else:
-            ids_a, A = side(pdf["__blk"] == bi)
-            ids_b, B = side(pdf["__blk"] == bj)
-            if len(ids_a) == 0 or len(ids_b) == 0:
-                return pd.DataFrame(
-                    {"cluster": [], "id_a": [], "id_b": [], "cosine_e4": []}
-                ).astype(
-                    {
-                        "cluster": "int64",
-                        "id_a": "int64",
-                        "id_b": "int64",
-                        "cosine_e4": "int64",
-                    }
-                )
-            gram = A @ B.T
-            cos = gram / np.outer(
-                np.sqrt((A * A).sum(axis=1)), np.sqrt((B * B).sum(axis=1))
-            )
+            ids_b, B, norm_b = side(bj)
+            cos = (A @ B.T) / np.outer(norm_a, norm_b)
             ii, jj = np.nonzero(cos >= threshold)
-            vals = cos[ii, jj]
-            # orient every cross pair as (smaller id, larger id)
-            la, lb = ids_a[ii], ids_b[jj]
-            ia, ib = np.minimum(la, lb), np.maximum(la, lb)
+        # orient every pair as (smaller id, larger id)
+        la, lb = ids_a[ii], ids_b[jj]
         return pd.DataFrame(
             {
-                "cluster": np.full(len(ia), cluster),
-                "id_a": ia,
-                "id_b": ib,
-                "cosine_e4": np_e4(vals),
+                "cluster": np.full(len(ii), int(pdf["cluster"].iloc[0])),
+                "id_a": np.minimum(la, lb),
+                "id_b": np.maximum(la, lb),
+                "cosine_e4": np_e4(cos[ii, jj]),
             }
         )
 
@@ -1124,9 +1007,7 @@ def semdedup_pairs_blocked(
     )
 
 
-def semdedup_keep(
-    assigned: DataFrame, threshold: float, pairs: DataFrame | None = None
-) -> DataFrame:
+def semdedup_keep(assigned: DataFrame, threshold: float) -> DataFrame:
     """The SemDeDup keep LIST — (id, cluster) of every vector that
     SURVIVES the keep-one policy (no smaller-id clustermate clears the
     similarity bar). This is what a production run actually joins
@@ -1134,34 +1015,21 @@ def semdedup_keep(
     reports the per-cluster accounting of the same decision. The
     anti-join is unhinted: the removed set scales with the corpus's
     duplicate mass, so AQE must be free to pick broadcast vs shuffle
-    (the dedup_survivors loser-set precedent).
-
-    ``pairs`` lets a caller computing BOTH outputs (the funnel and the
-    keep list) pay the applyInPandas gram kernel once —
-    :func:`semdedup_decisions` is that caller; default recomputes.
-    When ``pairs`` is supplied, ``threshold`` is DEAD — the pairs were
-    thresholded when built, and this function cannot re-check them;
-    pass the same threshold to both or the call site lies."""
-    if pairs is None:
-        pairs = semdedup_pairs(assigned, threshold)
+    (the dedup_survivors loser-set precedent)."""
+    pairs = semdedup_pairs(assigned, threshold)
     removed = pairs.select("cluster", F.col("id_b").alias("id")).distinct()
     return assigned.select("id", "cluster").join(
         removed, ["cluster", "id"], "left_anti"
     )
 
 
-def semdedup_survivors(
-    assigned: DataFrame, threshold: float, pairs: DataFrame | None = None
-) -> DataFrame:
+def semdedup_survivors(assigned: DataFrame, threshold: float) -> DataFrame:
     """SemDeDup keep-one policy: within each cluster, a vector is
     REMOVED iff some smaller-id vector in the same cluster clears the
     similarity threshold with it (the deterministic analogue of the
     paper's keep-one-per-duplicate-group). Returns per-cluster
-    (cluster, n_members, n_removed, n_kept). ``pairs`` as in
-    :func:`semdedup_keep` (the shared-kernel path; ``threshold`` is
-    dead when ``pairs`` is supplied)."""
-    if pairs is None:
-        pairs = semdedup_pairs(assigned, threshold)
+    (cluster, n_members, n_removed, n_kept)."""
+    pairs = semdedup_pairs(assigned, threshold)
     removed = pairs.select("cluster", F.col("id_b").alias("id")).distinct()
     flagged = assigned.select("cluster", "id").join(
         removed.withColumn("rm", F.lit(1)), ["cluster", "id"], "left"
@@ -1174,23 +1042,4 @@ def semdedup_survivors(
             F.count("rm").alias("n_removed"),
         )
         .withColumn("n_kept", F.col("n_members") - F.col("n_removed"))
-    )
-
-
-def semdedup_decisions(
-    assigned: DataFrame, threshold: float
-) -> tuple[DataFrame, DataFrame]:
-    """Both SemDeDup outputs — (keep_list, per-cluster funnel) — from
-    ONE gram-kernel pass (r9, VERDICT r8 note): ``semdedup_keep`` and
-    ``semdedup_survivors`` each recompute ``semdedup_pairs`` when
-    called separately, so a pipeline wanting the production keep list
-    AND its accounting paid the applyInPandas kernel twice. Here the
-    pairs DF is pooled-persisted once (operators/cache.bounded_persist
-    — the stratified_fraction_cut barrier precedent) and fed to both
-    consumers; a pytest pins the single-kernel claim by counting
-    semdedup_pairs invocations."""
-    pairs = bounded_persist(semdedup_pairs(assigned, threshold))
-    return (
-        semdedup_keep(assigned, threshold, pairs=pairs),
-        semdedup_survivors(assigned, threshold, pairs=pairs),
     )

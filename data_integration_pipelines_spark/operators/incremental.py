@@ -142,10 +142,8 @@ def fold_join_batches(
     view. Matching rows may arrive in DIFFERENT batches on each side —
     the delta rule catches every combination exactly once, which is
     what the ``incremental_join`` oracle (a plain one-shot join)
-    certifies. States persist between folds (multi-consumer — each
-    later delta joins against them)."""
-    from .cache import bounded_persist
-
+    certifies. The fold only builds a plan: states stay unions of their
+    batches, as nothing reads a state before the view's one action."""
     if len(a_batches) != len(b_batches):
         raise ValueError(
             f"paired folds require equal batch counts, got "
@@ -158,8 +156,8 @@ def fold_join_batches(
         inc = delta_join(a_state, b_state, da, db, on)
         if inc is not None:
             view = inc if view is None else view.unionByName(inc)
-        a_state = da if a_state is None else bounded_persist(a_state.unionByName(da))
-        b_state = db if b_state is None else bounded_persist(b_state.unionByName(db))
+        a_state = da if a_state is None else a_state.unionByName(da)
+        b_state = db if b_state is None else b_state.unionByName(db)
     return view
 
 
@@ -230,8 +228,6 @@ def fold_join_batches_mult(
     certifies. States accumulate as unnormalized delta unions
     (normalization is only needed at read time; the join is bilinear,
     so it distributes over the un-collapsed form too)."""
-    from .cache import bounded_persist
-
     if len(a_batches) != len(b_batches):
         raise ValueError(
             f"paired folds require equal batch counts, got "
@@ -244,8 +240,8 @@ def fold_join_batches_mult(
         inc = delta_join_mult(a_state, b_state, da, db, on)
         if inc is not None:
             view = inc if view is None else view.unionByName(inc)
-        a_state = da if a_state is None else bounded_persist(a_state.unionByName(da))
-        b_state = db if b_state is None else bounded_persist(b_state.unionByName(db))
+        a_state = da if a_state is None else a_state.unionByName(da)
+        b_state = db if b_state is None else b_state.unionByName(db)
     return None if view is None else normalize_mult(view)
 
 

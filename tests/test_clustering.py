@@ -246,54 +246,80 @@ def test_kmeans_table_reseeds_empty_cluster(spark):
     assert {r["cluster"] for r in dropped.collect()} == {0, 2}
 
 
-def test_blocked_semdedup_equals_unblocked(embeddings):
-    """The memory-bounded block-pair kernel must emit the EXACT pair
-    set of the single-group kernel, at any block size — blocking caps
-    task memory, never coverage or scores."""
-    from data_integration_pipelines_spark.operators.clustering import (
-        semdedup_pairs_blocked,
-    )
+def _brute_pairs(rows, threshold):
+    """(cluster, id_a, id_b, cosine_e4) by one unblocked NumPy gram
+    matrix per cluster over ``rows`` of (id, cluster, qvec)."""
+    import numpy as np
+
+    from data_integration_pipelines_spark.functions.quantize import np_e4
+
+    by_cluster: dict[int, list] = {}
+    for r in rows:
+        by_cluster.setdefault(r.cluster, []).append((r.id, r.qvec))
+    out = set()
+    for c, members in by_cluster.items():
+        members.sort()
+        ids = [i for i, _ in members]
+        X = np.array([v for _, v in members], dtype=np.float64)
+        nrm = np.sqrt((X * X).sum(axis=1))
+        cos = (X @ X.T) / np.outer(nrm, nrm)
+        for a in range(len(ids)):
+            for b in range(a + 1, len(ids)):
+                if cos[a, b] >= threshold:
+                    out.add((c, ids[a], ids[b], int(np_e4(cos[a, b : b + 1])[0])))
+    return out
+
+
+def test_blocked_semdedup_equals_unblocked(embeddings, monkeypatch):
+    """The rank-blocked pair kernel must emit the EXACT pair set of an
+    unblocked per-cluster gram matrix, at any block cap — blocking
+    caps task memory, never coverage or scores."""
+    import data_integration_pipelines_spark.operators.clustering as cl
 
     assigned, _ = kmeans_fit(embeddings, k=4, iters=2)
-    want = {
-        (r.cluster, r.id_a, r.id_b, r.cosine_e4)
-        for r in semdedup_pairs(assigned, 0.35).collect()
-    }
-    for max_block in (7, 30, 100000):
+    want = _brute_pairs(assigned.select("id", "cluster", "qvec").collect(), 0.35)
+    assert len(want) > 0
+    for cap in (7, 30, 100000):
+        monkeypatch.setattr(cl, "MAX_BLOCK", cap)
         got = {
             (r.cluster, r.id_a, r.id_b, r.cosine_e4)
-            for r in semdedup_pairs_blocked(assigned, 0.35, max_block).collect()
+            for r in semdedup_pairs(assigned, 0.35).collect()
         }
-        assert got == want, max_block
-    assert len(want) > 0
+        assert got == want, cap
 
 
-def test_semdedup_auto_switches_to_blocked_kernel(embeddings):
-    """``semdedup_pairs`` must route clusters larger than ``max_block``
-    through the blocked kernel INSIDE the same plan (skew safety at
-    scale: one duplicate-heavy cluster can't OOM a task), with the pair
-    set identical to the unblocked kernel."""
-    assigned, _ = kmeans_fit(embeddings, k=4, iters=2)
-    sizes = {
-        r.cluster: r.n
-        for r in assigned.groupBy("cluster").count().withColumnRenamed("count", "n").collect()
-    }
-    # pick a max_block that splits the clusters into both regimes so
-    # the union-of-kernels path (not just one branch) is exercised
-    cut = sorted(sizes.values())[len(sizes) // 2]
-    assert any(n > cut for n in sizes.values())
-    assert any(n <= cut for n in sizes.values())
-    want = {
-        (r.cluster, r.id_a, r.id_b, r.cosine_e4)
-        for r in semdedup_pairs(assigned, 0.35, max_block=None).collect()
-    }
-    got_df = semdedup_pairs(assigned, 0.35, max_block=cut)
-    got = {(r.cluster, r.id_a, r.id_b, r.cosine_e4) for r in got_df.collect()}
-    assert got == want and len(want) > 0
-    # both kernels really participate: the plan unions TWO grouped-
-    # pandas kernels (unblocked small-cluster side + blocked big side)
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") >= 2, plan
+def test_semdedup_pairs_one_kernel_at_any_cluster_size(spark, monkeypatch):
+    """A cluster larger than ``MAX_BLOCK`` is scored by the same single
+    grouped-pandas kernel as any other cluster, with the pairs it has
+    at the default cap — including pairs whose ids sit in different
+    rank blocks."""
+    import data_integration_pipelines_spark.operators.clustering as cl
+
+    # cluster 0: 12 rows (3 blocks at cap 5); id 11 repeats id 0's
+    # direction and id 6 nearly repeats id 1's; cluster 1: 3 rows
+    vecs = {i: [1 + i % 3 * 40, 1 + i * 7 % 5 * 30, 10 + i] for i in range(12)}
+    vecs[11] = [2 * x for x in vecs[0]]
+    vecs[6] = [x + 1 for x in vecs[1]]
+    rows = [(i, 0, v) for i, v in vecs.items()] + [
+        (20, 1, [5, 5, 5]),
+        (21, 1, [5, 5, 6]),
+        (22, 1, [-5, 9, 0]),
+    ]
+    assigned = spark.createDataFrame(
+        rows, "id bigint, cluster bigint, qvec array<bigint>"
+    )
+    want = _brute_pairs(assigned.collect(), 0.98)
+    assert (0, 0, 11, 10000) in want and (0, 1, 6) in {w[:3] for w in want}
+
+    for cap in (None, 5):  # the default cap, then 3 blocks in cluster 0
+        if cap is not None:
+            monkeypatch.setattr(cl, "MAX_BLOCK", cap)
+        df = semdedup_pairs(assigned, 0.98)
+        assert {tuple(r) for r in df.collect()} == want, cap
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # AQE prints the final plan first, then the initial one
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_auto_k_resolution():
@@ -488,39 +514,6 @@ def test_semdedup_keep_list_matches_survivor_accounting(embeddings):
     }
     for c, lo in mins.items():
         assert lo in by_cluster.get(c, []), f"cluster {c} min id removed"
-
-
-def test_semdedup_decisions_single_kernel_pass(embeddings, monkeypatch):
-    """semdedup_decisions (r9) must run the applyInPandas gram kernel
-    ONCE for both outputs — keep list and funnel — and those outputs
-    must equal the independently computed ones (VERDICT r8 note: the
-    separate calls each recomputed semdedup_pairs)."""
-    import data_integration_pipelines_spark.operators.clustering as cl
-
-    assigned, _ = kmeans_fit(embeddings, k=8, iters=3)
-    want_keep = {
-        (r.id, r.cluster) for r in cl.semdedup_keep(assigned, 0.35).collect()
-    }
-    want_funnel = {
-        (r.cluster, r.n_members, r.n_removed, r.n_kept)
-        for r in cl.semdedup_survivors(assigned, 0.35).collect()
-    }
-
-    calls = {"n": 0}
-    real_pairs = cl.semdedup_pairs
-
-    def counting_pairs(*a, **kw):
-        calls["n"] += 1
-        return real_pairs(*a, **kw)
-
-    monkeypatch.setattr(cl, "semdedup_pairs", counting_pairs)
-    keep, funnel = cl.semdedup_decisions(assigned, 0.35)
-    assert calls["n"] == 1, "gram kernel built more than once"
-    assert {(r.id, r.cluster) for r in keep.collect()} == want_keep
-    assert {
-        (r.cluster, r.n_members, r.n_removed, r.n_kept)
-        for r in funnel.collect()
-    } == want_funnel
 
 
 def test_semdedup_assign_scale_route_survives_structured_ids(spark):

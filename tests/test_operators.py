@@ -203,6 +203,39 @@ class TestClosure:
         assert sorted(map(tuple, ckpt_df.collect())) == want
         assert "LocalTableScan" not in ckpt_df._jdf.queryExecution().executedPlan().toString()
 
+    def test_fca_large_route_computes_closure_once(self, spark, monkeypatch):
+        """Over FCA_LOCAL_ROWS the routing fetch and the relation the
+        joins read are one materialization: building the operator
+        evaluates the closure's rows as often as on the local route."""
+        from pyspark.sql.types import LongType
+
+        from data_integration_pipelines_spark.operators import closure as cl
+
+        seen = spark.sparkContext.accumulator(0)
+
+        def tap(x):
+            seen.add(1)
+            return x
+
+        closure = spark.createDataFrame(
+            [(1, 0, 1), (2, 0, 1), (3, 1, 1), (3, 0, 2)],
+            "node long, ancestor long, depth int",
+        ).select(F.udf(tap, LongType())("node").alias("node"), "ancestor", "depth")
+        pairs = spark.createDataFrame([(3, 2), (1, 3)], ["a", "b"])
+
+        def build():
+            before = seen.value
+            out = first_common_ancestor(closure, pairs)
+            return seen.value - before, out
+
+        local_reads, local_df = build()
+        monkeypatch.setattr(cl, "FCA_LOCAL_ROWS", 1)
+        large_reads, large_df = build()
+        assert large_reads == local_reads > 0, (large_reads, local_reads)
+        assert sorted(map(tuple, large_df.collect())) == sorted(
+            map(tuple, local_df.collect())
+        )
+
     def test_driver_routes_build_in_one_fetch_job(self, spark):
         """Each size router decides and delivers its driver route with
         ONE bounded fetch. On 16-partition inputs that never shuffle,
