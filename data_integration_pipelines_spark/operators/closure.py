@@ -219,6 +219,9 @@ def first_common_ancestor(
     if local is not None:
         import pandas as pd
 
+        # nothing reads the filled checkpoint past the fetch: drop its
+        # blocks now rather than when the JVM collects the plan
+        full._jdf.queryExecution().logical().rdd().unpersist(False)
         full = closure.sparkSession.createDataFrame(
             pd.DataFrame.from_records(local, columns=full_plan.columns),
             schema=full_plan.schema,

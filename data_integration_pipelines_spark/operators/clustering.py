@@ -827,9 +827,9 @@ def semdedup_assign(
     if semdedup_route(n, kk, dim, flat_cells) == "flat":
         assigned, _ = kmeans_fit(df, id_col, vec_col, k=kk, iters=iters)
         # pooled-persist the assignment: downstream the pairs kernel
-        # reads it three times (size tag + small/big branches) and the
-        # survivors rollup once more — without the pool each consumer
-        # re-runs the interpreted HOF distance map (r11, guide §5.2)
+        # reads it once and the survivors rollup (or keep anti-join)
+        # once more — without the pool each consumer re-runs the
+        # interpreted HOF distance map (r11, guide §5.2)
         return bounded_persist(assigned.select("id", "qvec", "cluster"))
     step = max(1, n // max(4096, 8 * kk))
     # pooled-persist the sample: the seed guard's count and the fit's
@@ -939,6 +939,9 @@ def semdedup_pairs(
     BLAS call per block pair."""
     import numpy as np
 
+    # a NULL-embedding row is assigned no cluster (assign_clusters);
+    # it has no clustermate to pair with, so it never reaches a kernel
+    assigned = assigned.filter(F.col("cluster").isNotNull())
     by_cluster = Window.partitionBy("cluster")
     rank = F.row_number().over(by_cluster.orderBy("id")) - 1
     n_blocks = F.ceil(F.count(F.lit(1)).over(by_cluster) / MAX_BLOCK)

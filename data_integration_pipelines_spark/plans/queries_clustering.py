@@ -317,10 +317,10 @@ def semdedup_survivors_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop-out semantics (the kmeans_clusters_table precedent)
     assigned, _ = kmeans_fit_table(emb, k=k, iters=_ITERS, reseed_empty=False)
     # pooled-persist the assignment: semdedup_survivors traverses it
-    # four times (size tag, small/big kernel branches, the flagged
-    # rollup) and each traversal would otherwise re-run the whole
-    # centroid-table fit chain (r11 — the semdedup_assign front-door
-    # persist, applied to this direct-call twin)
+    # twice (the pair kernel, the flagged rollup) and each traversal
+    # would otherwise re-run the whole centroid-table fit chain (r11 —
+    # the semdedup_assign front-door persist, applied to this
+    # direct-call twin)
     assigned = bounded_persist(assigned.select("id", "qvec", "cluster"))
     return (
         semdedup_survivors(assigned, _SEMDEDUP_THRESHOLD)

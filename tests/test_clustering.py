@@ -322,6 +322,25 @@ def test_semdedup_pairs_one_kernel_at_any_cluster_size(spark, monkeypatch):
         assert final.count("FlatMapGroupsInPandas") == 1, plan
 
 
+def test_semdedup_pairs_skip_unassigned_rows(spark):
+    """A NULL-embedding row is assigned no cluster and no qvec
+    (assign_clusters); the pair kernel skips it instead of scoring a
+    NULL vector, so the pairs are those of the frame without it."""
+    rows = [
+        (1, 0, [5, 5, 5]),
+        (2, 0, [5, 5, 6]),
+        (3, 0, [-5, 9, 0]),
+        (4, 1, [1, 2, 3]),
+        (5, 1, [2, 4, 6]),
+    ]
+    assigned = spark.createDataFrame(
+        rows + [(9, None, None)], "id bigint, cluster bigint, qvec array<bigint>"
+    )
+    want = _brute_pairs([Row(id=i, cluster=c, qvec=v) for i, c, v in rows], 0.98)
+    assert len(want) == 2
+    assert {tuple(r) for r in semdedup_pairs(assigned, 0.98).collect()} == want
+
+
 def test_auto_k_resolution():
     """auto_k pins: the sf0.01 fixture (N=500) MUST resolve to the
     oracle's k=8 (semdedup_survivors_auto_k shares the unrolled k=8

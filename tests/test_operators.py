@@ -190,7 +190,11 @@ class TestClosure:
         )
         n_full = closure.count() + 500  # + one depth-0 row per node 0..499
         monkeypatch.setattr(cl, "FCA_LOCAL_ROWS", n_full)
+        jsc = spark.sparkContext._jsc
+        cached = set(jsc.getPersistentRDDs().keySet())
         local_df = first_common_ancestor(closure, pairs)
+        # the local route keeps no block of its routing checkpoint
+        assert set(jsc.getPersistentRDDs().keySet()) <= cached
         local_df.collect()
         plan = local_df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan, plan[:2000]
